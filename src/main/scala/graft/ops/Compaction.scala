@@ -79,7 +79,9 @@ object Compaction {
     // crashed append (duplicate full rows, absorbed at read time) —
     // the compact rewrite is the one place duplicates heal DURABLY.
     // Not for tables where repeated rows are data.
-    val df0 = spark.read.parquet(dir)
+    // the union of the file schemas: files written by different writers
+    // may carry different columns, and a rewrite must keep them all
+    val df0 = spark.read.option("mergeSchema", "true").parquet(dir)
     val df = if (distinctRows) df0.distinct() else df0
     // partitionBy + sortBy compose: keys cluster to their hive dirs and
     // rows sort by (partition cols ++ sortBy) within each task — the

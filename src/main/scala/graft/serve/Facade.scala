@@ -41,7 +41,7 @@ final class Facade(spark: SparkSession, root: String, collection: String) {
     val id = store.ingest(validated, cfg.table,
       url = cfg.url.getOrElse(""),
       description = cfg.description.getOrElse(""), ingestTs = ingestTs)
-    fireRefresh() // table descriptions may have changed
+    queryService.refresh() // the view carries the table descriptions
     id
   }
 
@@ -58,27 +58,21 @@ final class Facade(spark: SparkSession, root: String, collection: String) {
     })
   }
 
-  // Serving layers (HttpApi) register cache-invalidation hooks here so a
-  // stage/ingest after server start is visible without a restart.
-  private val refreshHooks = scala.collection.mutable.Buffer.empty[() => Unit]
-  def onRefresh(hook: () => Unit): Unit = refreshHooks += hook
-  private def fireRefresh(): Unit = refreshHooks.foreach(_())
-
   /** Snapshot RAW -> PROD as of an optional cutoff; rebuilds metadata and
-    * invalidates the serving caches. */
+    * drops the serving view (a stage by another Store shows through the
+    * view's stage-marker check instead). */
   def stage(cutoff: Option[Timestamp] = None): Unit = {
     store.stage(cutoff)
     queryService.refresh()
-    fireRefresh()
   }
 
   /** Incremental re-stage: rewrites only tables whose winning ingest
     * changed (beyond reference parity — the reference rebuilds PROD
-    * wholesale). Serving caches are invalidated only when something
+    * wholesale). The serving view is invalidated only when something
     * actually changed. Returns the rewritten table names. */
   def stageIncremental(cutoff: Option[Timestamp] = None): Seq[String] = {
     val changed = store.stageIncremental(cutoff)
-    if (changed.nonEmpty) { queryService.refresh(); fireRefresh() }
+    if (changed.nonEmpty) queryService.refresh()
     changed
   }
 
@@ -98,14 +92,11 @@ final class Facade(spark: SparkSession, root: String, collection: String) {
 
   /** Per-table column metadata for staged data (reference: facade.metadata,
     * facade.py:88-110): queryable columns + inferred dtypes/stats. With no
-    * table, the whole metadata frame (the CLI's --meta over all tables). */
-  def metadata(table: Option[String] = None): DataFrame = {
-    require(store.isStaged,
-      s"Data collection '$collection' is not staged. Run stage first.")
-    val meta = store.readMetadata()
-    table.fold(meta)(t => meta.filter(col("table_name") === t))
-      .orderBy(col("table_name"), col("column_name"))
-  }
+    * table, the whole metadata frame (the CLI's --meta over all tables).
+    * Served from the staged view, sorted by table then column: a
+    * driver-local frame whose collect runs no Spark job. */
+  def metadata(table: Option[String] = None): DataFrame =
+    queryService.view.metadata(table)
 
   /** Query PROD with the JSON filter DSL (the §3.1 read path). */
   def query(table: String, filtersJson: String = "{}",

@@ -2,6 +2,8 @@ package graft.serve
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Row
@@ -23,37 +25,29 @@ import graft.dsl.FilterDsl
 final class HttpApi(facade: Facade, collection: String) {
 
   private var server: HttpServer = _
+  private var pool: ExecutorService = _
+  private val workers = new ConcurrentLinkedQueue[Thread]()
 
-  // table -> latest description, driver-cached (the reference plucks it
-  // from the first data row per request, app.py:171; ours comes from the
-  // provenance log without a per-request job). Invalidated through the
-  // facade's refresh hooks, so ingests/stages after server start show up.
-  @volatile private var descriptionsCache: Option[Map[String, String]] = None
-  facade.onRefresh(() => descriptionsCache = None)
-
-  private def descriptions: Map[String, String] = descriptionsCache match {
-    case Some(m) => m
-    case None =>
-      import org.apache.spark.sql.functions.col
-      // scope to THIS collection's successful ingests — the log is
-      // shared by every collection under the root
-      val m = facade.store.readLog()
-        .where(col("data_collection") === collection && col("success") === 1)
-        .orderBy(col("ingest_id"))
-        .select("table_name", "table_description").collect()
-        .map(r => r.getString(0) -> Option(r.getString(1)).getOrElse(""))
-        .toMap
-      descriptionsCache = Some(m)
-      m
-  }
-
+  /** Serve on `port` (0 = any free one) from a fixed pool of one worker
+    * per core; returns the bound port. Requests read the facade's staged
+    * view, so concurrent ones share one resolution. */
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/data/", handle _)
     server.createContext("/metadata/", handleMetadata _)
-    server.setExecutor(null)
+    val bound = server.getAddress.getPort
+    val n = new AtomicInteger()
+    pool = Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors, r => {
+      // no inherited thread locals: the creating thread's Spark job group
+      // and local properties must not tag every request's jobs
+      val t = new Thread(null, r, s"HttpApi-$bound-worker-${n.incrementAndGet()}", 0, false)
+      t.setDaemon(true)
+      workers.add(t)
+      t
+    })
+    server.setExecutor(pool)
     server.start()
-    server.getAddress.getPort
+    bound
   }
 
   /** GET /metadata/{collection}?table_name=T — per-column metadata for a
@@ -79,7 +73,13 @@ final class HttpApi(facade: Facade, collection: String) {
     }
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop accepting, let in-flight requests finish, and join every
+    * worker thread. */
+  def stop(): Unit = if (server != null) {
+    server.stop(0)
+    pool.shutdown()
+    workers.forEach(_.join())
+  }
 
   private def handle(ex: HttpExchange): Unit = {
     try {
@@ -118,7 +118,8 @@ final class HttpApi(facade: Facade, collection: String) {
       val records = page.data.collect()
         .map(rowToJson(page.data.schema.fieldNames.toIndexedSeq, _))
       val cursorJson = page.nextCursor.map(_.toString).getOrElse("null")
-      val desc = jstr(descriptions.getOrElse(table, ""))
+      // the reference plucks it from the first data row (app.py:171)
+      val desc = jstr(facade.queryService.view.descriptions.getOrElse(table, ""))
       respond(ex, 200,
         s"""{"table_name": ${jstr(table)}, "table_description": $desc, "next_cursor": $cursorJson, "data": [${records.mkString(",")}]}""")
     } catch {

@@ -1,11 +1,12 @@
 package graft.serve
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dsl.FilterDsl
 import graft.model.CanonicalSchema
 import graft.store.Store
+import graft.store.Store.StagedView
 
 /** Serving layer: the reference's query lifecycle (SURVEY.md §3.1/§3.2)
   * re-expressed over a partition-pruned parquet PROD zone.
@@ -16,37 +17,59 @@ import graft.store.Store
   * keyset pagination on `row_uid`, and drop service + all-null columns
   * from the returned page (reference: facade.py:112-164, app.py:42-185).
   *
-  * Schema + queryable-column maps are cached on the driver so a request
-  * costs exactly one Spark job (the reference re-reads `_metadata` from
-  * SQLite per request — SURVEY.md §4 flags this as the thing to fix).
+  * Every request reads one [[StagedView]], resolved once per staged
+  * version: the PROD relation with its file listing and schema, the
+  * metadata rows and the queryable columns. A warm request therefore runs
+  * exactly one Spark job, the page (the reference re-reads `_metadata`
+  * from SQLite per request — SURVEY.md §4 flags this as the thing to fix).
   */
 final class QueryService(spark: SparkSession, store: Store) {
 
   val DefaultLimit = 1000   // reference: app.py:18
   val MaxLimit = 5000       // reference: app.py:19
 
-  // re-resolved per request: a cached DataFrame would pin the parquet
-  // file listing and break (or serve stale data) after a re-stage
-  // overwrites PROD; schema/queryable maps stay driver-cached and are
-  // dropped via refresh()
-  private def prod: DataFrame = store.readProd()
-  private lazy val queryableCache =
-    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
+  @volatile private var current: StagedView = _
 
-  /** Invalidate driver-side caches after a re-stage. */
-  def refresh(): Unit = queryableCache.clear()
+  /** The view of the staged version. A cached view is served while the
+    * stage marker's fingerprint still matches it — a driver-side check
+    * with no Spark job — so a re-stage by another Store or process shows
+    * on the next request. Resolution is serialized: concurrent first
+    * requests resolve once. */
+  def view: StagedView = {
+    val seen = current
+    if (seen != null && seen.fingerprint == store.stageFingerprint()) seen
+    else synchronized {
+      val now = current
+      if (now != null && now.fingerprint == store.stageFingerprint()) now
+      else { val fresh = store.resolveStaged(); current = fresh; fresh }
+    }
+  }
+
+  /** Drop the view; the next request resolves the staged version again. */
+  def refresh(): Unit = current = null
 
   import QueryService.Page
 
   def query(tableName: String, filtersJson: String = "{}",
             limit: Int = DefaultLimit, cursor: Option[Long] = None,
             cols: Option[Seq[String]] = None): Page = {
-    require(store.isStaged, s"collection is not staged")
-    val queryable = queryableCache.getOrElseUpdate(
-      tableName, store.queryableColumns(tableName))
-    require(queryable.size > 1, s"table '$tableName' is not staged")
+    val v = view
+    try page(v, tableName, filtersJson, limit, cursor, cols)
+    catch {
+      // the view's listing went stale (PROD files replaced before the
+      // marker swap): resolve again, once, and retry
+      case e: Exception if QueryService.missingFile(e) =>
+        synchronized { if (current eq v) current = null }
+        page(view, tableName, filtersJson, limit, cursor, cols)
+    }
+  }
 
-    val snapshot = prod
+  private def page(v: StagedView, tableName: String, filtersJson: String,
+                   limit: Int, cursor: Option[Long],
+                   cols: Option[Seq[String]]): Page = {
+    val queryable = v.queryable.getOrElse(tableName,
+      throw new IllegalArgumentException(s"table '$tableName' is not staged"))
+    val snapshot = v.prod
     val pred = FilterDsl.compileJson(filtersJson, snapshot.schema, Some(queryable))
     val clamped = math.min(math.max(limit, 1), MaxLimit)
 
@@ -92,4 +115,9 @@ object QueryService {
   /** One page of results + the keyset cursor for the next page. */
   final case class Page(data: org.apache.spark.sql.DataFrame,
                         nextCursor: Option[Long])
+
+  /** A read failed because a listed file is gone. */
+  private def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException])
 }

@@ -74,12 +74,11 @@ final class Store(spark: SparkSession, root: String, collection: String,
     fs.exists(hPath) && fs.listStatus(hPath).nonEmpty
   }
 
-  /** Read a table_name-partitioned zone with partition-column type
-    * inference OFF, scoped to this read only (partition discovery runs
-    * eagerly inside `load`). Partition values are strings like "1.1" /
-    * "5.6.J" — inference would read "1.1" back as a Double — but pinning
-    * the flag session-wide from a constructor would silently change every
-    * other read in the session. */
+  /** Run `f` with partition-column type inference OFF. Partition values
+    * are strings like "1.1" / "5.6.J" — inference would read "1.1" back
+    * as a Double. The flag is session-wide, so this only wraps the
+    * lease-held compaction rewrite; reads declare the type instead
+    * ([[readPartitioned]]). */
   private def withPartitionInferenceOff[T](f: => T): T = {
     val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     val prev = spark.conf.getOption(key)
@@ -91,8 +90,12 @@ final class Store(spark: SparkSession, root: String, collection: String,
     }
   }
 
+  /** Read a table_name-partitioned zone: `table_name` declared a string,
+    * every other column from the union of the zone's file schemas. Tables
+    * populate different dimension columns (a fuel-only table beside one
+    * with `sector`), so the first file's schema would drop the others'. */
   private def readPartitioned(path: String): DataFrame =
-    withPartitionInferenceOff { spark.read.parquet(path) }
+    org.apache.spark.sql.graftx.readPartitionedParquet(spark, path, "table_name")
 
   /** Compact a zone's small files in place: every ingest appends its own
     * file set to RAW (and incremental stages rewrite PROD partitions), so
@@ -459,8 +462,44 @@ final class Store(spark: SparkSession, root: String, collection: String,
     }
 
   def readProd(): DataFrame = {
-    recoverDirIfNeeded(prodPath)
+    require(isStaged, s"Data collection '$collection' is not staged. Run stage first.")
     readPartitioned(prodPath)
+  }
+
+  /** Driver-side fingerprint of the stage commit marker: name, size and
+    * modification time of each of its files, from one directory listing
+    * (no Spark job). [[stage]] and [[stageIncremental]] swap a freshly
+    * written marker in last, under new file names, so every completed
+    * re-stage — by this Store or by another one on the same root —
+    * changes it. None while no marker exists. */
+  def stageFingerprint(): Option[String] = {
+    val dir = new org.apache.hadoop.fs.Path(stageStatePath)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try Some(fs.listStatus(dir)
+      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
+      .sorted.mkString(","))
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** Resolve the staged version once, for serving: the PROD relation with
+    * its file listing and merged schema, the collected metadata rows and
+    * the table descriptions. The fingerprint is taken before anything is
+    * read, so a stage that lands mid-resolution leaves the view marked
+    * stale, never a stale view marked current. */
+  def resolveStaged(): StagedView = {
+    val fingerprint = stageFingerprint()
+    val prod = readProd()
+    val meta = readMetadata()
+    val rows = meta.collect()
+      .sortBy(r => (r.getAs[String]("table_name"), r.getAs[String]("column_name")))
+    // latest successful ingest of each table wins (ids grow with time)
+    val descriptions = readLog()
+      .where(col("data_collection") === collection && col("success") === 1)
+      .select("ingest_id", "table_name", "table_description").collect()
+      .sortBy(_.getLong(0))
+      .map(r => r.getString(1) -> Option(r.getString(2)).getOrElse(""))
+      .toMap
+    StagedView(fingerprint, prod, meta.schema, rows.toIndexedSeq, descriptions)
   }
 
   /** Incremental stage: rewrite ONLY the table_name partitions whose
@@ -676,16 +715,44 @@ final class Store(spark: SparkSession, root: String, collection: String,
     spark.read.parquet(metadataPath)
   }
 
-  /** Queryable columns for a table: non-empty, non-DATETIME (reference:
-    * validation.py:216-220 — queryability gated on _metadata presence). */
+  /** Queryable columns of one table, read fresh from the metadata zone
+    * (see [[Store.queryableByTable]]). */
   def queryableColumns(tableName: String): Set[String] =
-    readMetadata()
-      .filter(col("table_name") === tableName && col("n_non_nulls") > 0 &&
-        col("dtype") =!= "timestamp")
-      .select("column_name").collect().map(_.getString(0)).toSet + "table_name"
+    queryableByTable(readMetadata().where(col("table_name") === tableName).collect())
+      .getOrElse(tableName, Set("table_name"))
 }
 
 object Store {
+  /** One staged version, resolved once ([[Store.resolveStaged]]): the
+    * PROD relation (listing and schema resolved), the per-column metadata
+    * rows sorted by table then column (tables x columns, tiny) and each
+    * table's description. `fingerprint` is the stage marker's
+    * [[Store.stageFingerprint]] as of the resolution. */
+  final case class StagedView(fingerprint: Option[String], prod: DataFrame,
+                              metadataSchema: StructType,
+                              metadataRows: IndexedSeq[Row],
+                              descriptions: Map[String, String]) {
+    /** Queryable columns per staged table. */
+    val queryable: Map[String, Set[String]] = queryableByTable(metadataRows)
+
+    /** Metadata rows of one table (all with None) as a driver-local frame:
+      * collecting it runs no Spark job. */
+    def metadata(table: Option[String]): DataFrame = {
+      val rows = table.fold(metadataRows)(t =>
+        metadataRows.filter(_.getAs[String]("table_name") == t))
+      prod.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), metadataSchema)
+    }
+  }
+
+  /** Queryable columns per table from metadata rows: non-empty,
+    * non-DATETIME, plus `table_name` (reference: validation.py:216-220 —
+    * queryability gated on _metadata presence). Tables with none are
+    * absent. */
+  def queryableByTable(meta: Seq[Row]): Map[String, Set[String]] =
+    meta.filter(r => r.getAs[Long]("n_non_nulls") > 0 && r.getAs[String]("dtype") != "timestamp")
+      .groupBy(_.getAs[String]("table_name"))
+      .map { case (t, rs) => t -> (rs.map(_.getAs[String]("column_name")).toSet + "table_name") }
+
   /** Default cut-over from exact countDistinct to approx_count_distinct
     * in the metadata pass: small enough that the exact path never becomes
     * the dominant shuffle of a stage, large enough that every

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Shim into Spark's private[sql] Expression<->Column bridges, needed to
   * expose custom Catalyst expressions as user-facing Columns on Spark 4's
   * ColumnNode API (the public `new Column(expr)` constructor of Spark 3 is
-  * gone). Kept to two one-liners so the private-API surface is minimal. */
+  * gone). Each shim is a few lines so the private-API surface stays small. */
 package object graftx {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -33,4 +33,30 @@ package object graftx {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Read a hive-partitioned parquet directory the way
+    * `spark.read.parquet` resolves it — one file listing, one footer
+    * job — with two differences: the partition column is declared a
+    * string (values like "1.1" stay strings without touching the
+    * session-wide type-inference conf), and the data schema is the union
+    * of every file's footer schema (`mergeSchema`), not the first
+    * file's. A public `.schema(...)` read would need the merged schema
+    * up front and so a second listing. */
+  def readPartitionedParquet(spark: SparkSession, path: String,
+                             partitionCol: String): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val index = new InMemoryFileIndex(s, Seq(new org.apache.hadoop.fs.Path(path)),
+      Map.empty, Some(StructType(Seq(StructField(partitionCol, StringType)))))
+    val format = new ParquetFileFormat
+    val merged = format.inferSchema(s, Map("mergeSchema" -> "true"), index.allFiles())
+      .getOrElse(throw new IllegalArgumentException(s"no parquet files under $path"))
+    // nullable like every file-source read: a merged column is absent
+    // (null) in the files of tables that lack it
+    s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      StructType(merged.filterNot(_.name == partitionCol)).asNullable, None, format,
+      Map.empty)(s))
+  }
 }

@@ -82,6 +82,83 @@ class HttpApiSpec extends AnyFunSuite {
     assert(get("/metadata/dukes?table_name=9.9")._1 == 404)
   }
 
+  /** Spark jobs started by serving code while `body` runs. */
+  private def servingJobs(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.details.contains("graft.serve."))) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusDrain(sc); jobs.get() }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("a warm /data request runs exactly one Spark job, /metadata none") {
+    val data = s"/data/dukes?table_name=1.1&filters=${enc("""{"year": {"gte": 2020}}""")}"
+    assert(get(data)._1 == 200) // warm: the staged view is resolved
+    assert(servingJobs(assert(get(data)._1 == 200)) == 1)
+    assert(servingJobs(assert(get("/metadata/dukes?table_name=1.1")._1 == 200)) == 0)
+  }
+
+  /** The bodies of a keyset walk at limit 1 over table 1.1. */
+  private def walk(): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var cursor: Option[String] = None
+    var more = true
+    while (more) {
+      val (code, body) = get("/data/dukes?table_name=1.1&limit=1" + cursor.fold("")("&cursor=" + _))
+      assert(code == 200)
+      out += body
+      cursor = """"next_cursor": (\d+)""".r.findFirstMatchIn(body).map(_.group(1))
+      more = cursor.isDefined
+    }
+    out.result()
+  }
+
+  test("concurrent mixed requests return the bodies of the same requests sent one at a time") {
+    val gets = Seq(
+      s"/data/dukes?table_name=1.1&filters=${enc("""{"fuel": "gas"}""")}",
+      s"/data/dukes?table_name=1.1&filters=${enc("""{"$or": [{"fuel": "coal"}, {"year": 2019}]}""")}",
+      s"/data/dukes?table_name=1.1&filters=${enc("""{"year": {"gte": 2020}}""")}&cols=label,year",
+      "/data/dukes?table_name=1.1&limit=3",
+      "/metadata/dukes?table_name=1.1",
+      "/metadata/dukes")
+    val calls: Seq[() => Seq[String]] =
+      (gets ++ gets).map(p => () => Seq(get(p)._2)) ++ Seq(() => walk(), () => walk())
+    val sequential = calls.map(_())
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(calls.size)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val futures = calls.map(c => pool.submit(() => { start.await(); c() }))
+      start.countDown()
+      assert(futures.map(_.get()) == sequential)
+    } finally pool.shutdown()
+    // the walk visited every record, then got an empty last page
+    assert(sequential.last.size == 5 && sequential.last.last.contains(""""data": []"""))
+  }
+
+  test("stop() shuts the worker pool down and joins its threads, an in-flight request's too") {
+    // a facade of its own: its first request resolves the staged view
+    // (several Spark jobs), so it is still running when stop() is called
+    val root = facade.store.rawPath.stripSuffix("/dukes_raw")
+    val other = new HttpApi(new Facade(spark, root, "dukes"), "dukes")
+    val p = other.start()
+    def workers = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName.startsWith(s"HttpApi-$p-worker-") && t.isAlive)
+    val inFlight = new Thread(() =>
+      try client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/data/dukes?table_name=1.1"))
+        .timeout(java.time.Duration.ofSeconds(60)).GET().build(), HttpResponse.BodyHandlers.ofString())
+      catch { case _: java.io.IOException => () }) // the server may close first
+    inFlight.start()
+    while (workers.isEmpty) Thread.sleep(1)
+    other.stop()
+    assert(workers.isEmpty, workers.map(_.getName).mkString(", "))
+    inFlight.join()
+  }
+
   // keep last: mutates the staged data the earlier fixtures rely on
   test("description cache refreshes after a post-start ingest + stage") {
     val df2 = Seq((0, "Coal", 2022, "Gas", 9.0))

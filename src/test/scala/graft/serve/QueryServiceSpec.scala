@@ -66,6 +66,97 @@ class QueryServiceSpec extends AnyFunSuite {
     assert(f.query("1.1").data.select("value").collect().head.getDouble(0) == 2.0)
   }
 
+  test("a re-stage by another Facade on the same root shows on the next request, no refresh in the server") {
+    val root = Files.createTempDirectory("graft_qs_cross_").toString
+    val serving = new Facade(spark, root, "dukes")
+    serving.store.ingest(Seq((0, "Coal", 2019, "Gas", 1.0)).toDF("row", "label", "year", "fuel", "value"),
+      "1.1", description = "first", ingestTs = Timestamp.valueOf("2026-01-01 00:00:00"))
+    serving.stage()
+    val api = new HttpApi(serving, "dukes")
+    val port = api.start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def get(path: String): String = client.send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString()).body()
+    try {
+      assert(get("/data/dukes?table_name=1.1").contains(""""value": 1.0"""))
+      assert(!get("/metadata/dukes?table_name=1.1").contains("sector"))
+      val writer = new Facade(spark, root, "dukes")
+      writer.store.ingest(Seq((0, "Coal", 2019, "Gas", "industry", 2.0))
+          .toDF("row", "label", "year", "fuel", "sector", "value"),
+        "1.1", description = "second", ingestTs = Timestamp.valueOf("2026-01-02 00:00:00"))
+      writer.stage()
+      val data = get("/data/dukes?table_name=1.1")
+      assert(data.contains(""""value": 2.0""") && data.contains(""""sector": "industry""""))
+      assert(data.contains(""""table_description": "second""""))
+      assert(get("/metadata/dukes?table_name=1.1").contains(""""column_name": "sector""""))
+    } finally api.stop()
+  }
+
+  test("a stale file listing in the view is re-resolved once and the read retried") {
+    val root = Files.createTempDirectory("graft_qs_stale_").toString
+    val st = new Store(spark, root, "dukes")
+    st.initialize()
+    st.ingest(Seq((0, "Coal", 2019, "Gas", 1.0), (1, "Oil", 2020, "Coal", 2.0))
+      .toDF("row", "label", "year", "fuel", "value"), "1.1")
+    st.stage()
+    val qs = new QueryService(spark, st)
+    assert(qs.query("1.1").data.count() == 2)
+    val resolved = qs.view
+    // replace the table's files under new names, marker untouched: the
+    // view's listing now names files that are gone
+    val dir = new java.io.File(s"${st.prodPath}/table_name=1.1")
+    dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+      Files.move(f.toPath, new java.io.File(dir, "moved-" + f.getName).toPath)
+    }
+    val page = qs.query("1.1")
+    assert(page.data.select("value").as[Double].collect().sorted.toSeq == Seq(1.0, 2.0))
+    assert(qs.view ne resolved)
+    assert(qs.view.fingerprint == resolved.fingerprint)
+  }
+
+  test("concurrent first queries after a stage read table_name as a string") {
+    val root = Files.createTempDirectory("graft_qs_concurrent_").toString
+    val st = new Store(spark, root, "dukes")
+    st.initialize()
+    val tables = Seq("1.1", "1.10", "2.1", "2.10")
+    tables.zipWithIndex.foreach { case (t, i) =>
+      st.ingest(Seq((0, "Coal", 2019, "Gas", i.toDouble), (1, "Oil", 2020, "Coal", i + 0.5))
+        .toDF("row", "label", "year", "fuel", "value"), t)
+    }
+    st.stage()
+    // eight services, so eight view resolutions run at once, while a
+    // watcher samples the session-wide partition type inference flag
+    val asks = (0 until 8).map(i => (new QueryService(spark, st), tables(i % tables.size)))
+    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val initial = spark.conf.getOption(key)
+    val toggled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val watcher = new Thread(() =>
+      while (!done.get()) {
+        if (spark.conf.getOption(key) != initial) toggled.set(true)
+        Thread.onSpinWait()
+      })
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(asks.size)
+    try {
+      watcher.start()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val futures = asks.map { case (qs, t) => pool.submit(() => {
+        start.await()
+        qs.query(t).data
+      }) }
+      start.countDown()
+      asks.zip(futures).foreach { case ((_, t), f) =>
+        val data = f.get()
+        assert(data.schema("table_name").dataType == org.apache.spark.sql.types.StringType)
+        val i = tables.indexOf(t)
+        assert(data.select("table_name", "value").as[(String, Double)].collect().sorted.toSeq ==
+          Seq((t, i.toDouble), (t, i + 0.5)))
+      }
+    } finally { pool.shutdown(); done.set(true); watcher.join() }
+    assert(!toggled.get(), s"a request toggled the session-wide $key")
+  }
+
   test("column projection narrows the page, filters still see all columns") {
     val page = service.query("1.1", """{"fuel": "gas", "year": {"gte": 2020}}""",
       cols = Some(Seq("label", "year")))

@@ -174,6 +174,34 @@ class StoreSpec extends AnyFunSuite {
     assert(st.queryableColumns("tbl").contains("label"))
   }
 
+  test("dimension columns of a later-listed table survive staging (zones read with the union of file schemas)") {
+    val st = freshStore()
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    // 1.1 is listed first and has no sector column
+    st.ingest(Seq((0, "Coal", 2020, "Gas", 1.0), (1, "Oil", 2020, "Coal", 2.0))
+      .toDF("row", "label", "year", "fuel", "value"), "1.1", ingestTs = t0)
+    st.ingest(Seq((0, "Coal", 2020, "Gas", "industry", 3.0),
+        (1, "Coal", 2020, "Gas", "transport", 4.0), (2, "Oil", 2021, "Oil", "industry", 5.0))
+      .toDF("row", "label", "year", "fuel", "sector", "value"), "2.1", ingestTs = t0)
+    st.stage()
+    def sectors(df: org.apache.spark.sql.DataFrame) =
+      df.where(col("table_name") === "2.1").select("sector").as[String].collect().sorted.toSeq
+    assert(sectors(st.readProd()) == Seq("industry", "industry", "transport"))
+    assert(sectors(st.snapshot(Some(t0))) == Seq("industry", "industry", "transport"))
+    assert(st.readProd().schema("table_name").dataType == org.apache.spark.sql.types.StringType)
+    val sectorStats = st.readMetadata()
+      .where(col("table_name") === "2.1" && col("column_name") === "sector")
+      .select("n_non_nulls", "n_unique").as[(Long, Long)].collect().toSeq
+    assert(sectorStats == Seq((3L, 2L)))
+    val page = new graft.serve.QueryService(spark, st).query("2.1", """{"sector": "Industry"}""")
+    assert(page.data.select("value").as[Double].collect().sorted.toSeq == Seq(3.0, 5.0))
+    // a compaction rewrite keeps them too
+    st.compactZone("raw")
+    st.compactZone("prod")
+    assert(sectors(st.snapshot()) == Seq("industry", "industry", "transport"))
+    assert(sectors(st.readProd()) == Seq("industry", "industry", "transport"))
+  }
+
   test("incremental stage rebuilds metadata only for changed tables, equivalently") {
     val st = freshStore()
     st.ingest(frame(1), "a", ingestTs = Timestamp.valueOf("2026-01-01 00:00:00"))
