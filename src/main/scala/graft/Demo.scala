@@ -52,7 +52,7 @@ object Demo {
     println("staged snapshot (latest successful version per table)")
 
     // re-publish (revision) — incremental stage rewrites ONLY this
-    // table's partition via dynamic partition overwrite
+    // table's partition
     val id2 = facade.ingest(Workbook(Vector("1.1" -> sheet)), cfg,
       Some(template), ingestTs = Timestamp.valueOf("2026-02-01 00:00:00"))
     println(s"ingested v2 as ingest_id=$id2")

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * shards, so reruns are idempotent and a training job can resume from
   * a manifest diff. One shuffle clustered on the shard id (each output
   * file holds exactly one shard), manifest computed from the SAME
-  * shuffled pass — no second scan. The write publishes via the
-  * live/_bak atomic-swap discipline. */
+  * shuffled pass — no second scan. The write publishes through
+  * [[graft.ops.FsPaths.swapDir]]. */
 object Shards {
 
   /** Write `docs` as `nShards` shards under `outDir` (subdir
@@ -39,7 +39,7 @@ object Shards {
         sum(col(nTokensCol).cast("long")).as("n_tokens"))
       .orderBy(col("shard"))
     manifest.coalesce(1).write.mode("overwrite").parquet(tmp + "/_manifest")
-    swapDir(spark, tmp, outDir)
+    graft.ops.FsPaths.swapDir(spark.sparkContext.hadoopConfiguration, tmp, outDir)
     spark.read.parquet(outDir.stripSuffix("/") + "/_manifest")
   }
 
@@ -76,16 +76,4 @@ object Shards {
   /** Read one shard (partition-pruned directory scan). */
   def shard(spark: SparkSession, dir: String, k: Int): DataFrame =
     spark.read.parquet(dir).where(col("shard") === k)
-
-  private def swapDir(spark: SparkSession, tmp: String, live: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val liveP = new org.apache.hadoop.fs.Path(live)
-    val fs = liveP.getFileSystem(conf)
-    val bakP = new org.apache.hadoop.fs.Path(live + "_bak")
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    fs.delete(bakP, true)
-    if (fs.exists(liveP)) fs.rename(liveP, bakP)
-    fs.rename(tmpP, liveP)
-    fs.delete(bakP, true): Unit
-  }
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions.col
   * directories with thousands of KB-sized files, and at 100 TB the
   * resulting task-per-file scheduling + footer-read overhead dominates
   * scan time. Compaction rewrites the directory into ~`targetBytes`
-  * files and swaps it into place atomically (the [[graft.store.Store]]
-  * live/_bak rename discipline, crash-recoverable at every instant).
+  * files and swaps it into place atomically ([[FsPaths.swapDir]],
+  * crash-recoverable at every instant).
   *
   * Sizing uses the INPUT byte totals: output files come out smaller when
   * the rewrite improves encoding/compression locality (e.g. after
@@ -80,8 +80,10 @@ object Compaction {
     // the compact rewrite is the one place duplicates heal DURABLY.
     // Not for tables where repeated rows are data.
     // the union of the file schemas: files written by different writers
-    // may carry different columns, and a rewrite must keep them all
-    val df0 = spark.read.option("mergeSchema", "true").parquet(dir)
+    // may carry different columns, and a rewrite must keep them all.
+    // Partition columns read as strings, so every directory name is
+    // written back exactly as it was ("1.1" never becomes a double)
+    val df0 = org.apache.spark.sql.graftx.readPartitionedParquet(spark, dir, partitionBy)
     val df = if (distinctRows) df0.distinct() else df0
     // partitionBy + sortBy compose: keys cluster to their hive dirs and
     // rows sort by (partition cols ++ sortBy) within each task — the
@@ -100,7 +102,7 @@ object Compaction {
       .option("parquet.page.row.count.limit", ScanPrune.PageRowLimit)
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(tmp)
-    swapDir(spark, tmp, dir)
+    FsPaths.swapDir(spark.sparkContext.hadoopConfiguration, tmp, dir)
     val after = dataFiles(spark, dir)
     CompactionStats(before.size.toLong, before.map(_._2).sum,
       after.size.toLong, after.map(_._2).sum)
@@ -121,23 +123,9 @@ object Compaction {
     val shaped = Zorder.cluster(spark.read.parquet(dir), dims, nOut)
     val tmp = dir.stripSuffix("/") + "__compact_tmp"
     shaped.write.mode("overwrite").parquet(tmp)
-    swapDir(spark, tmp, dir)
+    FsPaths.swapDir(spark.sparkContext.hadoopConfiguration, tmp, dir)
     val after = dataFiles(spark, dir)
     CompactionStats(before.size.toLong, before.map(_._2).sum,
       after.size.toLong, after.map(_._2).sum)
-  }
-
-  // live -> _bak, tmp -> live, drop _bak — same discipline as
-  // Store.swapDir so a crash at any instant leaves a recoverable copy
-  private def swapDir(spark: SparkSession, tmp: String, live: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val liveP = new Path(live)
-    val fs = liveP.getFileSystem(conf)
-    val bakP = new Path(live + "_bak")
-    val tmpP = new Path(tmp)
-    fs.delete(bakP, true)
-    if (fs.exists(liveP)) fs.rename(liveP, bakP)
-    fs.rename(tmpP, liveP)
-    fs.delete(bakP, true): Unit
   }
 }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+
 /** The one hidden-path filter every driver-side directory walk must
   * share. `FileSystem.listFiles(dir, recursive = true)` surfaces files
   * under in-flight/crashed commit-protocol subtrees —
@@ -165,10 +167,132 @@ object FsPaths {
     * carry write-unique UUIDs, so any rewrite changes the
     * fingerprint even inside one mtime tick. */
   def dirFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-                     dir: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] = {
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq
+                     dir: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
+    // no exists() probe first: a swap may move `dir` away between the
+    // probe and the listing
+    try fs.listStatus(dir).toSeq
       .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
       .sortBy(_._1)
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  // ------------------------------------------------------ backup swaps
+  //
+  // Every directory this project replaces in place is published by one
+  // discipline: write the new copy beside the live one, rename live to a
+  // `_bak` sibling, rename the copy in, drop the backup. At every instant
+  // one complete copy exists under a known name, and the heals below
+  // turn any crash window back into a readable directory.
+
+  /** The backup a swap keeps of `live`: the sibling `<live>_bak`. */
+  private def bakOf(live: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
+    live.suffix("_bak")
+
+  /** True iff `dir` exists and has at least one entry: a swap that
+    * crashed can leave an empty live directory, which holds no data. */
+  def nonEmpty(fs: org.apache.hadoop.fs.FileSystem,
+               dir: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(dir) && fs.listStatus(dir).nonEmpty
+
+  private def mustRename(fs: org.apache.hadoop.fs.FileSystem,
+                         src: org.apache.hadoop.fs.Path,
+                         dst: org.apache.hadoop.fs.Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"could not rename $src to $dst")
+
+  /** Heal [[swapDir]]'s crash window: with `live` missing or empty and
+    * its backup present, the backup is the only copy — move it back. */
+  def restoreBak(fs: org.apache.hadoop.fs.FileSystem,
+                 live: org.apache.hadoop.fs.Path): Unit = {
+    val bak = bakOf(live)
+    if (!nonEmpty(fs, live) && fs.exists(bak)) {
+      fs.delete(live, true)
+      mustRename(fs, bak, live)
+    }
   }
+
+  /** Publish the freshly written `tmp` as `live`: live -> _bak, tmp ->
+    * live, drop _bak. A leftover backup is restored first, so a swap
+    * never deletes the only copy a crashed one left behind. */
+  def swapDir(fs: org.apache.hadoop.fs.FileSystem,
+              tmp: org.apache.hadoop.fs.Path,
+              live: org.apache.hadoop.fs.Path): Unit = {
+    restoreBak(fs, live)
+    val bak = bakOf(live)
+    fs.delete(bak, true)
+    if (fs.exists(live)) mustRename(fs, live, bak)
+    mustRename(fs, tmp, live)
+    fs.delete(bak, true): Unit
+  }
+
+  /** [[swapDir]] by path strings, on the filesystem `live` names. */
+  def swapDir(conf: org.apache.hadoop.conf.Configuration, tmp: String,
+              live: String): Unit = {
+    val liveP = new org.apache.hadoop.fs.Path(live)
+    swapDir(liveP.getFileSystem(conf), new org.apache.hadoop.fs.Path(tmp), liveP)
+  }
+
+  /** Publish single partitions of a hive-partitioned `live` directory:
+    * each `partCol=value` dir of `staging` replaces its live namesake
+    * through a `_bak_` backup; a value with no staged dir is removed the
+    * same way. The backup name escapes the `=` (`_bak_partCol%3Dvalue`):
+    * Spark's listing skips `_`-prefixed names only when they hold no `=`,
+    * so a read during the swap misses the partition instead of failing
+    * on a second partition column. [[healZone]] resolves a crashed swap
+    * on the next read. `staging` is deleted afterwards. */
+  def swapPartitions(fs: org.apache.hadoop.fs.FileSystem,
+                     staging: org.apache.hadoop.fs.Path,
+                     live: org.apache.hadoop.fs.Path,
+                     partCol: String, values: Seq[String]): Unit = {
+    fs.mkdirs(live)
+    values.foreach { v =>
+      val name = ExternalCatalogUtils.getPartitionPathString(partCol, v)
+      val dst = new org.apache.hadoop.fs.Path(live, name)
+      val src = new org.apache.hadoop.fs.Path(staging, name)
+      val bak = new org.apache.hadoop.fs.Path(live, "_bak_" + ExternalCatalogUtils.escapePathName(name))
+      fs.delete(bak, true)
+      if (fs.exists(dst)) mustRename(fs, dst, bak)
+      if (fs.exists(src)) mustRename(fs, src, dst)
+      fs.delete(bak, true)
+    }
+    fs.delete(staging, true): Unit
+  }
+
+  /** Does `live` hold anything [[healZone]] would act on: a whole-dir
+    * backup, or a `_bak_` partition backup inside it? */
+  def needsHeal(fs: org.apache.hadoop.fs.FileSystem,
+                live: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(bakOf(live)) ||
+      (fs.exists(live) && fs.listStatus(live).exists(_.getPath.getName.startsWith("_bak_")))
+
+  /** Heal every crash window of [[swapDir]] and [[swapPartitions]] on a
+    * zone: restore a whole-directory backup, then each `_bak_` partition
+    * with no live namesake (the swap stopped after moving it aside). A
+    * backup beside its live namesake is a finished swap that lost only
+    * its cleanup: it is dropped. Only safe while no swap is in flight —
+    * callers heal under the writer's lease. */
+  def healZone(fs: org.apache.hadoop.fs.FileSystem,
+               live: org.apache.hadoop.fs.Path): Unit = {
+    restoreBak(fs, live)
+    fs.delete(bakOf(live), true)
+    if (fs.exists(live)) fs.listStatus(live).foreach { st =>
+      val name = st.getPath.getName
+      if (name.startsWith("_bak_")) {
+        val dst = new org.apache.hadoop.fs.Path(live,
+          ExternalCatalogUtils.unescapePathName(name.stripPrefix("_bak_")))
+        if (fs.exists(dst)) fs.delete(st.getPath, true)
+        else mustRename(fs, st.getPath, dst)
+      }
+    }
+  }
+
+  /** The values of the `partCol=value` partitions directly under `dir`
+    * (unescaped); empty for a missing dir. */
+  def partitionValues(fs: org.apache.hadoop.fs.FileSystem,
+                      dir: org.apache.hadoop.fs.Path,
+                      partCol: String): Set[String] =
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).iterator.filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case n if n.startsWith(partCol + "=") =>
+        ExternalCatalogUtils.unescapePathName(n.drop(partCol.length + 1)) }
+      .toSet
 }

@@ -68,8 +68,9 @@ final class Facade(spark: SparkSession, root: String, collection: String) {
 
   /** Incremental re-stage: rewrites only tables whose winning ingest
     * changed (beyond reference parity — the reference rebuilds PROD
-    * wholesale). The serving view is invalidated only when something
-    * actually changed. Returns the rewritten table names. */
+    * wholesale) and removes tables with no winner under the cutoff. The
+    * serving view is invalidated only when something actually changed.
+    * Returns the rewritten and removed table names. */
   def stageIncremental(cutoff: Option[Timestamp] = None): Seq[String] = {
     val changed = store.stageIncremental(cutoff)
     if (changed.nonEmpty) queryService.refresh()

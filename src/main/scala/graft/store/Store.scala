@@ -2,10 +2,14 @@ package graft.store
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.ops.FsPaths
 
 /** Versioned store: RAW zone + ingest log + PROD snapshot + metadata.
   *
@@ -13,10 +17,12 @@ import org.apache.spark.sql.types._
   *   {root}/{collection}_raw/          RAW zone, append-only parquet,
   *                                     partitioned by table_name (partition
   *                                     pruning on the mandatory predicate)
-  *   {root}/{collection}_prod/         PROD snapshot, overwritten on stage,
-  *                                     partitioned by table_name
+  *   {root}/{collection}_prod/         PROD snapshot, partitioned by
+  *                                     table_name; staging replaces whole
+  *                                     table partitions
   *   {root}/_ingest_log/               provenance (small)
-  *   {root}/_metadata/                 per-column stats (small)
+  *   {root}/_metadata_{collection}/    per-column stats (small)
+  *   {root}/_stage_state_{collection}/ stage commit marker (small)
   *
   * Mirrors the reference's SQLite zones (read_write.py:267-404) but scales:
   * RAW appends are partitioned parquet writes, the snapshot is a window
@@ -27,8 +33,7 @@ import org.apache.spark.sql.types._
   *   tables at or under it get exact `countDistinct` (mirrors the
   *   reference's nunique()), larger ones get `approx_count_distinct` —
   *   at 100 TB an exact distinct is an O(distinct-values) shuffle per
-  *   stage for stats nobody reads at full precision. The count that
-  *   gates the switch is parquet-footer metadata, not a scan.
+  *   stage for stats nobody reads at full precision.
   * @param leaseTtlMs how stale the root writer lease's heartbeat may be
   *   before another process treats this writer as crashed and reclaims —
   *   see the [[graft.ops.Lease]] TTL invariant. */
@@ -44,9 +49,9 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * root `_lease`
     * ([[graft.ops.Lease.withHeld]]): the reference documents a
     * single-writer assumption (sqlite autoincrement, utils.py:194) that
-    * used to bind here purely by call discipline — but the log swap
-    * ([[rewriteLog]]), the PROD swap ([[swapDir]]) and vacuum's
-    * partition swaps are not concurrent-safe against a SECOND PROCESS
+    * used to bind here purely by call discipline — but the backup swaps
+    * of the log, PROD, metadata and RAW partitions are not
+    * concurrent-safe against a SECOND PROCESS
     * (two CLI invocations racing a stage would interleave renames, and
     * two ingests would read the same max ingest_id). The lease is at
     * the ROOT because the ingest log is shared across collections under
@@ -54,8 +59,8 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * foreign lease refuses loudly; a stale one (crashed writer) is
     * reclaimed; this process passes through its own (a long-lived
     * writer that took [[graft.ops.Lease.acquire]] keeps it, and nested
-    * verbs — stageIncremental's fallback stage — do not self-deadlock).
-    * Read verbs stay lease-free. */
+    * verbs do not self-deadlock). Read verbs stay lease-free unless they
+    * find a backup to [[heal]]. */
   private def withWriterLease[A](what: String)(body: => A): A =
     graft.ops.Lease.withHeld(spark, root, leaseTtlMs, s"store $what")(body)
   val rawPath: String = p(s"${collection}_raw")
@@ -68,56 +73,55 @@ final class Store(spark: SparkSession, root: String, collection: String,
   val metadataPath: String = p(s"_metadata_$collection")
   val stageStatePath: String = p(s"_stage_state_$collection")
 
-  private def exists(path: String): Boolean = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(hPath) && fs.listStatus(hPath).nonEmpty
-  }
+  private def path(s: String) = new Path(s)
+  private def fs: FileSystem = path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def exists(dir: String): Boolean = FsPaths.nonEmpty(fs, path(dir))
 
-  /** Run `f` with partition-column type inference OFF. Partition values
-    * are strings like "1.1" / "5.6.J" — inference would read "1.1" back
-    * as a Double. The flag is session-wide, so this only wraps the
-    * lease-held compaction rewrite; reads declare the type instead
-    * ([[readPartitioned]]). */
-  private def withPartitionInferenceOff[T](f: => T): T = {
-    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** Publish a freshly written `tmp` directory as `live`
+    * ([[FsPaths.swapDir]]); [[heal]] resolves its crash window. */
+  private def swapIn(tmp: String, live: String): Unit = FsPaths.swapDir(fs, path(tmp), path(live))
+
+  /** The one heal of every swapped directory (log, metadata, marker and
+    * both zones): restore a whole-directory backup (a crash inside
+    * [[swapIn]] or [[compactZone]]) and the per-partition backups of
+    * staging and [[vacuum]] ([[FsPaths.healZone]]). Read verbs run
+    * lease-free, so a heal takes the writer lease first: a backup seen
+    * while another writer holds it is that writer's swap in flight, not
+    * a crash, and healing it would race the swap's second rename. */
+  private def heal(dir: String): Unit =
+    if (FsPaths.needsHeal(fs, path(dir)))
+      try withWriterLease("heal")(FsPaths.healZone(fs, path(dir)))
+      catch { case _: IllegalStateException => () } // held: the holder's swap
 
   /** Read a table_name-partitioned zone: `table_name` declared a string,
     * every other column from the union of the zone's file schemas. Tables
     * populate different dimension columns (a fuel-only table beside one
     * with `sector`), so the first file's schema would drop the others'. */
-  private def readPartitioned(path: String): DataFrame =
-    org.apache.spark.sql.graftx.readPartitionedParquet(spark, path, "table_name")
+  private def readPartitioned(dir: String): DataFrame =
+    org.apache.spark.sql.graftx.readPartitionedParquet(spark, dir, Seq("table_name"))
 
   /** Compact a zone's small files in place: every ingest appends its own
-    * file set to RAW (and incremental stages rewrite PROD partitions), so
-    * a long-lived store accumulates exactly the small-files pathology
+    * file set to RAW (and every stage rewrites PROD partitions), so a
+    * long-lived store accumulates exactly the small-files pathology
     * [[graft.ops.Compaction]] exists for. The table_name partition layout
-    * is preserved, provenance columns are untouched (a rewrite moves
-    * rows, never edits them), and the publish is the same atomic swap as
-    * staging. Partition-type inference is scoped OFF around the rewrite —
-    * the compaction's internal read would otherwise coerce "1.1"-style
-    * table names to doubles and corrupt the layout on write. */
+    * is preserved (the rewrite reads partition values as strings, so
+    * "1.1"-style names are written back unchanged), provenance columns
+    * are untouched (a rewrite moves rows, never edits them), and the
+    * publish is a whole-directory backup swap that the zone heal
+    * restores after a crash. */
   def compactZone(zone: String, targetBytes: Long = 128L << 20): graft.ops.Compaction.CompactionStats = {
-    val path = zone match {
+    val dir = zone match {
       case "raw"  => rawPath
-      case "prod" => recoverDirIfNeeded(prodPath); prodPath
+      case "prod" => prodPath
       case other  => throw new IllegalArgumentException(
         s"compactZone: unknown zone '$other' (raw|prod)")
     }
     withWriterLease("compactZone") {
-      withPartitionInferenceOff {
-        graft.ops.Compaction.compact(spark, path, targetBytes,
-          partitionBy = Seq("table_name"))
-      }
+      // a backup left by a crash is invisible to the rewrite's listing:
+      // restore it first, or the swap would publish the zone without it
+      heal(dir)
+      graft.ops.Compaction.compact(spark, dir, targetBytes,
+        partitionBy = Seq("table_name"))
     }
   }
 
@@ -133,7 +137,7 @@ final class Store(spark: SparkSession, root: String, collection: String,
     // racing a first-ever ingest could otherwise pass its exists check
     // before the ingest's log row lands and bury it under a fresh
     // empty log (the overwrite deletes the dir first)
-    recoverLogIfNeeded()
+    heal(logPath)
     if (!exists(logPath)) {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], logSchema)
@@ -141,48 +145,26 @@ final class Store(spark: SparkSession, root: String, collection: String,
     }
   }
 
-  def isStaged: Boolean = { recoverDirIfNeeded(prodPath); exists(prodPath) }
+  def isStaged: Boolean = { heal(prodPath); exists(prodPath) }
 
   // ---------------------------------------------------------- ingest path
 
+  /** The ingest log, its swap crash window healed first: the reference
+    * gets this atomicity for free from SQLite; on a filesystem the
+    * backup swap is the equivalent. */
   def readLog(): DataFrame = {
-    recoverLogIfNeeded()
+    heal(logPath)
     if (exists(logPath)) spark.read.schema(logSchema).parquet(logPath)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logSchema)
   }
 
-  /** Crash recovery for [[rewriteLog]]: if a crash landed between the two
-    * renames, the live log is missing but the backup is intact — restore
-    * it. The reference gets this atomicity for free from SQLite; on a
-    * filesystem the backup-swap is the equivalent. */
-  private def recoverLogIfNeeded(): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logP = new org.apache.hadoop.fs.Path(logPath)
-    val fs = logP.getFileSystem(conf)
-    val bakP = new org.apache.hadoop.fs.Path(p("_ingest_log_bak"))
-    if (!exists(logPath) && fs.exists(bakP)) {
-      fs.delete(logP, true) // an empty/partial dir would block the rename
-      fs.rename(bakP, logP): Unit
-    }
-  }
-
-  /** Replace the (tiny, driver-held) log with `rows`, never leaving a
-    * window with no recoverable log: write tmp -> move live to backup ->
-    * move tmp in -> drop backup. A crash before the first rename keeps the
-    * old log; between the renames, readLog restores the backup. */
+  /** Replace the (tiny, driver-held) log with `rows` through a backup
+    * swap, never leaving a window with no recoverable log. */
   private def rewriteLog(rows: Array[Row]): Unit = {
     val tmp = p("_ingest_log_tmp")
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), logSchema)
       .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logP = new org.apache.hadoop.fs.Path(logPath)
-    val fs = logP.getFileSystem(conf)
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    val bakP = new org.apache.hadoop.fs.Path(p("_ingest_log_bak"))
-    fs.delete(bakP, true)
-    if (fs.exists(logP)) fs.rename(logP, bakP)
-    fs.rename(tmpP, logP)
-    fs.delete(bakP, true): Unit
+    swapIn(tmp, logPath)
   }
 
   /** Next ingest id: max+1 read-modify-write on the driver. Single-writer
@@ -205,6 +187,9 @@ final class Store(spark: SparkSession, root: String, collection: String,
     // ingests in different processes would otherwise both read the same
     // max ingest_id and tag DISTINCT data with ONE id
     withWriterLease("ingest") {
+      // an append into a zone left mid-compaction would start a fresh
+      // RAW beside the backup that holds every earlier ingest
+      heal(rawPath)
       val id = nextIngestId()
       appendLogRow(id, ingestTs, tableName, url, description, success = 0)
       df.withColumn("ingest_id", lit(id))
@@ -231,34 +216,30 @@ final class Store(spark: SparkSession, root: String, collection: String,
   }
 
   def readRaw(): DataFrame = {
-    recoverRawPartitionsIfNeeded()
+    heal(rawPath)
     require(exists(rawPath),
       s"collection '$collection' has no ingested data yet (RAW zone empty)")
     readPartitioned(rawPath)
   }
 
-  /** Heal vacuum's per-partition backup-swap crash windows: a
-    * `_bak_table_name=T` dir with no live partition means the swap was
-    * interrupted after the backup rename — restore it (the log was not
-    * rewritten yet, so the restored rows are exactly what the log still
-    * catalogs, and a re-run of vacuum purges them again). A backup WITH a
-    * live partition means the swap completed and only the cleanup was
-    * lost — drop it. */
-  private def recoverRawPartitionsIfNeeded(): Unit = {
-    val rawP = new org.apache.hadoop.fs.Path(rawPath)
-    val fs = rawP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rawP)) return
-    fs.listStatus(rawP).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("_bak_table_name=")) {
-        val live = new org.apache.hadoop.fs.Path(rawP, name.stripPrefix("_bak_"))
-        if (fs.exists(live)) fs.delete(st.getPath, true)
-        else fs.rename(st.getPath, live): Unit
-      }
-    }
+  // ---------------------------------------------------------- staging path
+
+  /** The log rows every staged view is built from: successful ingests of
+    * this collection at or before the cutoff. */
+  private def committedLog(cutoff: Option[Timestamp]): DataFrame = {
+    val log = readLog().filter(col("success") === 1 && col("data_collection") === collection)
+    cutoff.fold(log)(ts => log.filter(col("ingest_ts") <= lit(ts)))
   }
 
-  // ---------------------------------------------------------- staging path
+  /** (table_name, ingest_id, ingest_ts) of each table's winning ingest:
+    * the latest committed one, ties broken by the higher id. */
+  private def winners(cutoff: Option[Timestamp]): DataFrame = {
+    val w = Window.partitionBy("table_name")
+      .orderBy(col("ingest_ts").desc, col("ingest_id").desc)
+    committedLog(cutoff).withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .select(col("table_name"), col("ingest_id"), col("ingest_ts"))
+  }
 
   /** The as-of snapshot frame: latest successful ingest per table_name with
     * ingest_ts <= cutoff (reference: raw_to_prod CTE, read_write.py:357-391,
@@ -269,16 +250,8 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * then RAW joins it broadcast on ingest_id. No shuffle of RAW at all;
     * partition pruning by table_name still applies downstream.
     */
-  def snapshot(cutoff: Option[Timestamp] = None): DataFrame = {
-    val log0 = readLog().filter(col("success") === 1 && col("data_collection") === collection)
-    val log = cutoff.fold(log0)(ts => log0.filter(col("ingest_ts") <= lit(ts)))
-    val w = Window.partitionBy("table_name")
-      .orderBy(col("ingest_ts").desc, col("ingest_id").desc)
-    val winners = log.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("ingest_id"), col("ingest_ts"))
-    readRaw().join(broadcast(winners), Seq("ingest_id"))
-  }
+  def snapshot(cutoff: Option[Timestamp] = None): DataFrame =
+    readRaw().join(broadcast(winners(cutoff).drop("table_name")), Seq("ingest_id"))
 
   /** SCD2 validity-interval history of one logical table: every row
     * version keyed by `keyCols`, with consecutive ingests that did NOT
@@ -299,9 +272,7 @@ final class Store(spark: SparkSession, root: String, collection: String,
               valueCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty && valueCols.nonEmpty,
       "history: keyCols and valueCols must be non-empty")
-    val log = readLog()
-      .filter(col("success") === 1 && col("data_collection") === collection &&
-        col("table_name") === tableName)
+    val log = committedLog(None).filter(col("table_name") === tableName)
       .select(col("ingest_id"), col("ingest_ts"))
     val seqd = log.withColumn("__seq", row_number().over(
       Window.orderBy(col("ingest_ts"), col("ingest_id"))))
@@ -336,63 +307,91 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * dataset — unlike versioned reference tables where only the latest
     * publication wins (snapshot). Same crash-safety: success=0 batches
     * are invisible. */
-  def appendedRows(cutoff: Option[Timestamp] = None): DataFrame = {
-    val log0 = readLog().filter(col("success") === 1 && col("data_collection") === collection)
-    val log = cutoff.fold(log0)(ts => log0.filter(col("ingest_ts") <= lit(ts)))
-    readRaw().join(broadcast(log.select("ingest_id")), Seq("ingest_id"), "left_semi")
-  }
+  def appendedRows(cutoff: Option[Timestamp] = None): DataFrame =
+    readRaw().join(broadcast(committedLog(cutoff).select("ingest_id")), Seq("ingest_id"), "left_semi")
 
-  /** Materialize the snapshot into PROD with a stable `row_uid` for keyset
-    * pagination (reference rowid, app.py:138-147; SURVEY.md §7.3).
-    * row_uid = ingest_id * 2^32 + row — stable across identical stages,
-    * unique because `row` is unique within one (ingest, table). */
+  /** Materialize the as-of snapshot into PROD, every table rewritten, with
+    * a stable `row_uid` for keyset pagination (reference rowid,
+    * app.py:138-147; SURVEY.md §7.3) and fresh metadata. */
   def stage(cutoff: Option[Timestamp] = None): Unit = withWriterLease("stage") {
-    val withUid = withRowUid(snapshot(cutoff))
-    // never overwrite PROD in place: a failed stage job (or a crash
-    // mid-commit) must leave the previous snapshot intact. Write the new
-    // snapshot beside it, then backup-swap (same discipline as the log).
-    val tmp = prodPath + "_tmp"
-    clusterForSkipping(withUid)
-      .write.mode("overwrite").partitionBy("table_name").parquet(tmp)
-    swapDir(tmp, prodPath)
-    writeMetadata(readProd())
-    // commit marker LAST: the staged winner set. stageIncremental compares
-    // against this (not against PROD), so a crash anywhere above leaves a
-    // stale marker and the next incremental re-does the affected tables —
-    // idempotent extra work, never silently-stale metadata.
-    writeStageState(logWinners(cutoff))
+    restage(cutoff)((winners, _) => winners.keySet): Unit
   }
 
-  /** Winning (table_name -> ingest_id) under the cutoff, from the tiny
-    * log — the same window the snapshot joins on. */
-  private def logWinners(cutoff: Option[Timestamp]): Map[String, Long] = {
-    val w = Window.partitionBy("table_name")
-      .orderBy(col("ingest_ts").desc, col("ingest_id").desc)
-    val log0 = readLog().filter(col("success") === 1 && col("data_collection") === collection)
-    val log = cutoff.fold(log0)(ts => log0.filter(col("ingest_ts") <= lit(ts)))
-    log.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("table_name"), col("ingest_id"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  /** Incremental stage: rewrite ONLY the tables whose winning ingest
+    * changed since the last stage (every table when there is no stage
+    * marker or no PROD). At 100 TB a full snapshot rebuild (the
+    * reference's DROP + CREATE AS SELECT, read_write.py:398) rewrites
+    * everything on every re-publish of one table; this touches just the
+    * changed partitions. Returns the tables rewritten or removed. */
+  def stageIncremental(cutoff: Option[Timestamp] = None): Seq[String] = withWriterLease("stage") {
+    restage(cutoff) { (winners, marker) =>
+      // compare against the commit marker of the last completed stage,
+      // not against PROD: a crash between the PROD swap and the metadata
+      // write leaves PROD updated but the marker stale, so the table is
+      // re-done instead of its metadata staying stale forever
+      marker.fold(winners.keySet)(m =>
+        winners.collect { case (t, (id, _)) if !m.get(t).contains(id) => t }.toSet)
+    }
+  }
+
+  /** The one staging routine. The log is read once into the winner map
+    * (table -> ingest id and ts); `pick` chooses the tables to rewrite
+    * from it and the marker of the last completed stage (None when there
+    * is none, or no PROD). Every PROD partition, and every marker entry,
+    * without a winner is removed: PROD holds exactly the winners.
+    *
+    * Order of effects: the rewritten tables are written to a staging
+    * directory, then published partition by partition through
+    * [[FsPaths.swapPartitions]] (the zone heal restores any partition a
+    * crash leaves aside); the metadata is swapped in next and the marker
+    * LAST, so a crash anywhere leaves a stale marker and the next
+    * incremental stage re-does the affected tables — idempotent extra
+    * work, never silently stale metadata. Returns the tables rewritten or
+    * removed, sorted. */
+  private def restage(cutoff: Option[Timestamp])(
+      pick: (Map[String, (Long, Timestamp)], Option[Map[String, Long]]) => Set[String]): Seq[String] = {
+    val won = winners(cutoff).collect()   // tiny: one row per table
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getTimestamp(2)))).toMap
+    val marker = if (isStaged) readStageState() else None
+    val rewrite = pick(won, marker)
+    val removed = (FsPaths.partitionValues(fs, path(prodPath), "table_name") ++
+      marker.fold(Set.empty[String])(_.keySet)) -- won.keySet
+    val touched = (rewrite ++ removed).toSeq.sorted
+    if (touched.isEmpty) return Nil
+
+    val staging = prodPath + "_tmp"
+    fs.delete(path(staging), true) // a crashed stage's leftovers never publish
+    val slice = if (rewrite.isEmpty) None else Some {
+      val ids = rewrite.toSeq.map(t => Row(won(t)._1, won(t)._2))
+      val df = withRowUid(readRaw()
+        .where(col("table_name").isin(rewrite.toSeq: _*))
+        .join(broadcast(spark.createDataFrame(java.util.Arrays.asList(ids: _*), winnerSchema)),
+          Seq("ingest_id")))
+      clusterForSkipping(df)
+        .write.mode("overwrite").partitionBy("table_name").parquet(staging)
+      df
+    }
+    // a removed table has no staged partition: its swap only deletes
+    FsPaths.swapPartitions(fs, path(staging), path(prodPath), "table_name", touched)
+    writeMetadata(slice, won.keySet -- rewrite)
+    writeStageState(won.map { case (t, (id, _)) => t -> id })
+    touched
   }
 
   private def writeStageState(winners: Map[String, Long]): Unit = {
-    val schema = StructType(Seq(
-      StructField("table_name", StringType, nullable = false),
-      StructField("ingest_id", LongType, nullable = false)))
     val rows = winners.toSeq.sortBy(_._1).map { case (t, id) => Row(t, id) }
     val tmp = stageStatePath + "_tmp"
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), markerSchema)
       .coalesce(1).write.mode("overwrite").parquet(tmp)
-    swapDir(tmp, stageStatePath)
+    swapIn(tmp, stageStatePath)
   }
 
   /** The winner set as of the last COMPLETED stage (None when no marker
-    * exists — pre-marker directories fall back to scanning PROD). */
+    * exists). */
   private def readStageState(): Option[Map[String, Long]] = {
-    recoverDirIfNeeded(stageStatePath)
+    heal(stageStatePath)
     if (!exists(stageStatePath)) None
-    else Some(spark.read.parquet(stageStatePath)
+    else Some(spark.read.schema(markerSchema).parquet(stageStatePath)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
   }
 
@@ -406,60 +405,28 @@ final class Store(spark: SparkSession, root: String, collection: String,
       df.sortWithinPartitions(col("table_name"), col("year"))
     else df
 
-  /** Swap a freshly-written directory into place, keeping the previous
-    * one recoverable at every instant: live -> _bak, tmp -> live, drop
-    * _bak. [[recoverDirIfNeeded]] heals the crash window between the two
-    * renames. */
-  private def swapDir(tmp: String, live: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val liveP = new org.apache.hadoop.fs.Path(live)
-    val fs = liveP.getFileSystem(conf)
-    val bakP = new org.apache.hadoop.fs.Path(live + "_bak")
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    fs.delete(bakP, true)
-    if (fs.exists(liveP)) fs.rename(liveP, bakP)
-    fs.rename(tmpP, liveP)
-    fs.delete(bakP, true): Unit
-  }
-
-  private def recoverDirIfNeeded(live: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val liveP = new org.apache.hadoop.fs.Path(live)
-    val fs = liveP.getFileSystem(conf)
-    val bakP = new org.apache.hadoop.fs.Path(live + "_bak")
-    if (!exists(live) && fs.exists(bakP)) {
-      fs.delete(liveP, true)
-      fs.rename(bakP, liveP): Unit
-    }
-  }
-
-  /** row_uid assignment. Canonical frames carry `row` (unique within one
-    * (ingest, table)) → ingest_id * 2^32 + row, stable across identical
-    * stages. Frames WITHOUT `row` get a zipWithIndex fallback: the global
-    * index is collision-free by construction (monotonically_increasing_id
-    * is not — its high bits are the partition id, so any row beyond
-    * partition 0 bled out of the 2^32 slot and into another ingest's uid
-    * range). zipWithIndex costs one extra count job and no shuffle — the
-    * scalable shape; a row_number window over (ingest, table) would sort
-    * each whole table inside a single partition.
+  /** row_uid = ingest_id * 2^32 + the record's rank within its staged
+    * table, ordered by `row` (where the frame has one), then `year`, then
+    * every other orderable column. Each melted year of a sheet row is its
+    * own record, so every record gets its own uid and a keyset page that
+    * ends inside a row resumes at the next year of that row; the uid
+    * ascends with (row, year), the order pages are served in. The rank
+    * depends only on the table's own rows, so a table staged alone
+    * (incremental) gets the same uids as in a full stage.
     *
     * Uniqueness contract is per table (pagination always carries the
     * mandatory table_name predicate, and one table partition is written by
-    * exactly one winning ingest), which the global index satisfies even
-    * when an index value exceeds 2^32. */
-  private def withRowUid(df: DataFrame): DataFrame =
-    if (df.columns.contains("row"))
-      df.withColumn("row_uid",
-        col("ingest_id") * lit(4294967296L) + col("row").cast("long"))
-    else {
-      val schema = df.schema.add("__idx", LongType, nullable = false)
-      val indexed = df.sparkSession.createDataFrame(
-        df.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
-        schema)
-      indexed
-        .withColumn("row_uid", col("ingest_id") * lit(4294967296L) + col("__idx"))
-        .drop("__idx")
+    * exactly one winning ingest). */
+  private def withRowUid(df: DataFrame): DataFrame = {
+    val lead = Seq("row", "year").filter(df.columns.contains)
+    // never empty: ingest_id is one of them (constant within a table)
+    val rest = df.schema.fields.toSeq.collect {
+      case f if !lead.contains(f.name) && f.name != "table_name" &&
+        RowOrdering.isOrderable(f.dataType) => f.name
     }
+    val w = Window.partitionBy("table_name").orderBy((lead ++ rest).map(col): _*)
+    df.withColumn("row_uid", col("ingest_id") * lit(1L << 32) + row_number().over(w))
+  }
 
   def readProd(): DataFrame = {
     require(isStaged, s"Data collection '$collection' is not staged. Run stage first.")
@@ -472,14 +439,9 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * written marker in last, under new file names, so every completed
     * re-stage — by this Store or by another one on the same root —
     * changes it. None while no marker exists. */
-  def stageFingerprint(): Option[String] = {
-    val dir = new org.apache.hadoop.fs.Path(stageStatePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try Some(fs.listStatus(dir)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString(","))
-    catch { case _: java.io.FileNotFoundException => None }
-  }
+  def stageFingerprint(): Option[String] =
+    Some(FsPaths.dirFingerprint(fs, path(stageStatePath)))
+      .filter(_.nonEmpty).map(_.mkString(","))
 
   /** Resolve the staged version once, for serving: the PROD relation with
     * its file listing and merged schema, the collected metadata rows and
@@ -493,65 +455,12 @@ final class Store(spark: SparkSession, root: String, collection: String,
     val rows = meta.collect()
       .sortBy(r => (r.getAs[String]("table_name"), r.getAs[String]("column_name")))
     // latest successful ingest of each table wins (ids grow with time)
-    val descriptions = readLog()
-      .where(col("data_collection") === collection && col("success") === 1)
+    val descriptions = committedLog(None)
       .select("ingest_id", "table_name", "table_description").collect()
       .sortBy(_.getLong(0))
       .map(r => r.getString(1) -> Option(r.getString(2)).getOrElse(""))
       .toMap
     StagedView(fingerprint, prod, meta.schema, rows.toIndexedSeq, descriptions)
-  }
-
-  /** Incremental stage: rewrite ONLY the table_name partitions whose
-    * winning ingest changed since the last stage, via dynamic partition
-    * overwrite. At 100 TB a full snapshot rebuild (the reference's
-    * DROP + CREATE AS SELECT, read_write.py:398) rewrites everything on
-    * every re-publish of one table; this touches just the changed
-    * partitions and leaves the rest of PROD untouched.
-    *
-    * Falls back to a full stage when PROD does not exist yet. */
-  def stageIncremental(cutoff: Option[Timestamp] = None): Seq[String] = withWriterLease("stage") {
-    if (!isStaged) { stage(cutoff); return Seq("*") }
-    // winners per table under the cutoff (tiny frame, driver-collectable)
-    val winners = logWinners(cutoff)
-    // compare against the commit marker of the last completed stage, not
-    // against PROD: a crash between the PROD write and the metadata write
-    // would leave PROD already updated, and a PROD-derived comparison
-    // would then report "no change" and never refresh the stale metadata.
-    // The marker is also O(tables) to read where the PROD aggregation was
-    // a full ingest_id column scan. Pre-marker directories fall back to
-    // the PROD scan once; the marker is written on the way out.
-    val current = readStageState().getOrElse {
-      readProd().groupBy("table_name")
-        .agg(max("ingest_id").as("ingest_id"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-    val changed = winners.filter { case (t, id) => !current.get(t).contains(id) }
-      .keys.toSeq.sorted
-    if (changed.isEmpty) return Nil
-
-    val winnerIds = winners.filter { case (t, _) => changed.contains(t) }
-      .values.toSeq
-    val raw = readRaw()
-    val log0 = readLog().filter(col("success") === 1 && col("data_collection") === collection)
-    val log = cutoff.fold(log0)(ts => log0.filter(col("ingest_ts") <= lit(ts)))
-    val tsLookup = log.select(col("ingest_id"), col("ingest_ts")).distinct()
-    val slice = withRowUid(raw
-      .where(col("table_name").isin(changed.map(x => x: Any): _*))
-      .where(col("ingest_id").isin(winnerIds.map(x => x: Any): _*))
-      .join(broadcast(tsLookup), Seq("ingest_id")))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      clusterForSkipping(slice)
-        .write.mode("overwrite").partitionBy("table_name").parquet(prodPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    writeMetadataIncremental(changed)
-    writeStageState(winners)
-    changed
   }
 
   /** Retention vacuum: rewrite RAW keeping only each table's newest
@@ -562,58 +471,40 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * retention policy. Returns the ingest ids that were purged.
     *
     * Scale shape: the keep-set comes from the tiny log; RAW is rewritten
-    * only for table partitions that actually lose rows, via dynamic
-    * partition overwrite. */
+    * only for table partitions that actually lose rows, published with
+    * the same per-partition backup swap as staging. */
   def vacuum(retainVersions: Int = 2): Seq[Long] = withWriterLease("vacuum") {
     require(retainVersions >= 1, "retainVersions must be >= 1")
     val w = Window.partitionBy("table_name")
       .orderBy(col("ingest_ts").desc, col("ingest_id").desc)
-    val mine = readLog().filter(col("data_collection") === collection)
-    val ranked = mine.filter(col("success") === 1)
-      .withColumn("__rn", row_number().over(w))
-    val keepIds = ranked.filter(col("__rn") <= retainVersions)
+    val keepIds = committedLog(None).withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= retainVersions)
       .select("ingest_id").collect().map(_.getLong(0)).toSet
-    val allIds = mine.select("ingest_id").collect().map(_.getLong(0)).toSet
+    val allIds = readLog().filter(col("data_collection") === collection)
+      .select("ingest_id").collect().map(_.getLong(0)).toSet
     val purge = (allIds -- keepIds).toSeq.sorted
     if (purge.isEmpty) return Nil
 
-    // tables that lose rows -> dynamic-overwrite only those partitions
+    // tables that lose rows -> rewrite only those partitions
     val affected = readRaw()
-      .where(col("ingest_id").isin(purge.map(x => x: Any): _*))
+      .where(col("ingest_id").isin(purge: _*))
       .select("table_name").distinct().collect().map(_.getString(0)).toSeq
     if (affected.nonEmpty) {
       // a path cannot be read and overwritten in the same job: rewrite
       // the surviving rows of affected partitions into a staging dir,
-      // then swap the partition directories
+      // then swap the partition directories (a partition whose every
+      // ingest was purged has no staging dir and is removed)
       val staging = p(s"${collection}_raw_vacuum_tmp")
-      val kept = readRaw()
-        .where(col("table_name").isin(affected.map(x => x: Any): _*))
-        .where(col("ingest_id").isin(keepIds.toSeq.map(x => x: Any): _*))
-      kept.write.mode("overwrite").partitionBy("table_name").parquet(staging)
-      val fs = new org.apache.hadoop.fs.Path(rawPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      affected.foreach { t =>
-        val dst = new org.apache.hadoop.fs.Path(s"$rawPath/table_name=$t")
-        val src = new org.apache.hadoop.fs.Path(s"$staging/table_name=$t")
-        // backup-swap, never delete-then-rename: a crash between a delete
-        // and the rename would lose the partition outright (the kept rows
-        // would exist only in the staging dir). The _bak name starts with
-        // an underscore, so a half-finished swap is invisible to partition
-        // discovery; [[recoverRawPartitionsIfNeeded]] heals both crash
-        // windows on the next read.
-        val bak = new org.apache.hadoop.fs.Path(s"$rawPath/_bak_table_name=$t")
-        fs.delete(bak, true)
-        if (fs.exists(dst)) fs.rename(dst, bak)
-        // a partition whose every ingest was purged has no staging dir
-        if (fs.exists(src)) fs.rename(src, dst)
-        fs.delete(bak, true)
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      readRaw()
+        .where(col("table_name").isin(affected: _*))
+        .where(col("ingest_id").isin(keepIds.toSeq: _*))
+        .write.mode("overwrite").partitionBy("table_name").parquet(staging)
+      FsPaths.swapPartitions(fs, path(staging), path(rawPath), "table_name", affected)
     }
     // prune the log rows of purged ingests (keep the log an accurate
     // catalog of what is physically present)
     val keptLog = readLog()
-      .filter(!(col("ingest_id").isin(purge.map(x => x: Any): _*)))
+      .filter(!(col("ingest_id").isin(purge: _*)))
       .collect()
     rewriteLog(keptLog)
     purge
@@ -633,8 +524,7 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * without the caller having to remember. */
   def columnStats(df: DataFrame, exact: Boolean = true,
                   sampleK: Int = 0, quantiles: Boolean = false): DataFrame = {
-    val dataCols = df.columns.filterNot(c =>
-      c == "table_name" || graft.model.CanonicalSchema.serviceColumns.contains(c))
+    val dataCols = statColumns(df).map(_._1)
     val numeric = df.schema.fields.filter(f =>
       f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
       .map(_.name).toSet
@@ -673,45 +563,45 @@ final class Store(spark: SparkSession, root: String, collection: String,
     perCol.reduce(_.unionByName(_))
   }
 
+  /** (column, dtype) of every column [[columnStats]] reports on: all but
+    * `table_name` and the service columns. */
+  private def statColumns(df: DataFrame): Seq[(String, String)] =
+    df.schema.fields.toSeq.collect {
+      case f if f.name != "table_name" && !graft.model.CanonicalSchema.serviceColumns.contains(f.name) =>
+        f.name -> f.dataType.simpleString
+    }
+
   /** Exact distinct mirrors the reference below the threshold; above it
-    * the approx sketch avoids the O(distinct-values) shuffle. The gating
-    * count on a fresh parquet read is answered from footer metadata. */
+    * the approx sketch avoids the O(distinct-values) shuffle. */
   private def statsExactness(slice: DataFrame): Boolean =
     slice.count() <= exactStatsMaxRows
 
-  private def writeMetadata(prod: DataFrame): Unit =
-    writeMetadataAtomic(columnStats(prod, exact = statsExactness(prod)))
-
-  /** Incremental metadata rebuild: column stats are independent per
-    * (table_name, column), so after a partial stage only the CHANGED
-    * tables' stats are recomputed — a partition-pruned scan — and merged
-    * with the untouched tables' existing rows. A full-PROD rescan per
-    * incremental stage would erase most of stageIncremental's win at
-    * 100 TB. The merged frame is driver-materialized (it is tables *
-    * columns small) before overwriting the path it was read from. */
-  private def writeMetadataIncremental(changedTables: Seq[String]): Unit = {
-    val anyChanged = changedTables.map(x => x: Any)
-    val slice = readProd().where(col("table_name").isin(anyChanged: _*))
-    val fresh = columnStats(slice, exact = statsExactness(slice))
-    val kept = readMetadata()
-      .where(!col("table_name").isin(anyChanged: _*))
-    val merged = kept.unionByName(fresh)
-    val rows = merged.collect()
-    writeMetadataAtomic(spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), merged.schema))
-  }
-
-  /** Metadata writes go through the same tmp + backup-swap discipline as
-    * the log and PROD: an in-place overwrite deletes first, so a crash
-    * mid-write would lose all metadata until a full stage() rebuild. */
-  private def writeMetadataAtomic(stats: DataFrame): Unit = {
+  /** The one metadata path of every stage: the last stage's rows of the
+    * `keep` tables plus fresh [[columnStats]] of the rewritten slice
+    * (tables x columns, driver-sized), swapped in through a backup swap
+    * (an in-place overwrite deletes first, so a crash mid-write would lose
+    * all metadata). Stats are independent per (table, column), so a kept
+    * table's rows stay valid; they are aligned to the slice's columns,
+    * because RAW is read with the union of its file schemas and a column
+    * first ingested since is all null in the kept tables' data. */
+  private def writeMetadata(slice: Option[DataFrame], keep: Set[String]): Unit = {
+    val kept =
+      if (keep.isEmpty) Map.empty[(String, String), Row]
+      else readMetadata().where(col("table_name").isin(keep.toSeq: _*)).collect()
+        .map(r => (r.getAs[String]("table_name"), r.getAs[String]("column_name")) -> r).toMap
+    val rows = slice.fold(kept.values.toSeq) { df =>
+      val aligned = for (t <- keep.toSeq; (c, dtype) <- statColumns(df))
+        yield kept.getOrElse((t, c), Row(t, c, 0L, 0L, dtype))
+      aligned ++ columnStats(df, exact = statsExactness(df)).collect()
+    }
     val tmp = metadataPath + "_tmp"
-    stats.coalesce(1).write.mode("overwrite").parquet(tmp)
-    swapDir(tmp, metadataPath)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), metadataSchema)
+      .coalesce(1).write.mode("overwrite").parquet(tmp)
+    swapIn(tmp, metadataPath)
   }
 
   def readMetadata(): DataFrame = {
-    recoverDirIfNeeded(metadataPath)
+    heal(metadataPath)
     spark.read.parquet(metadataPath)
   }
 
@@ -758,6 +648,26 @@ object Store {
     * the dominant shuffle of a stage, large enough that every
     * reference-scale collection keeps reference-identical stats. */
   val DefaultExactStatsMaxRows: Long = 10000000L
+
+  /** Schema of the metadata rows a stage writes ([[Store.columnStats]]
+    * with its defaults). */
+  private val metadataSchema: StructType = StructType(Seq(
+    StructField("table_name", StringType),
+    StructField("column_name", StringType),
+    StructField("n_non_nulls", LongType),
+    StructField("n_unique", LongType),
+    StructField("dtype", StringType)))
+
+  /** Schema of the stage commit marker: each staged table's winning
+    * ingest. */
+  private val markerSchema: StructType = StructType(Seq(
+    StructField("table_name", StringType, nullable = false),
+    StructField("ingest_id", LongType, nullable = false)))
+
+  /** Schema of the winner ids a stage joins RAW with. */
+  private val winnerSchema: StructType = StructType(Seq(
+    StructField("ingest_id", LongType, nullable = false),
+    StructField("ingest_ts", TimestampType, nullable = false)))
 
   /** Provenance log schema (reference: utils.py:191-203). */
   val logSchema: StructType = StructType(Seq(

@@ -667,7 +667,7 @@ object VecIndex {
       .coalesce(1).write.mode("overwrite").parquet(pending)
     writeEpoch(spark, pending, epoch)
     writeEpoch(spark, tmp, epoch)
-    swapDir(spark, tmp, s"$indexDir/lists")
+    graft.ops.FsPaths.swapDir(spark.sparkContext.hadoopConfiguration, tmp, s"$indexDir/lists")
     completePending(spark, indexDir)
   }
 
@@ -688,15 +688,17 @@ object VecIndex {
   }
 
   /** Heal-on-open for [[installReassigned]]'s crash windows. First
-    * restores any half-finished [[swapDir]] (live renamed away, data
-    * intact under `_bak` — a raw read would otherwise fail loudly on a
-    * healthy index), then resolves a leftover pending install by epoch
+    * restores any half-finished [[graft.ops.FsPaths.swapDir]] (live
+    * renamed away, data intact under `_bak` — a raw read would otherwise
+    * fail loudly on a healthy index), then resolves a leftover pending install by epoch
     * comparison. Runs on every [[loadCentroids]]; maintenance ops are
     * single-writer by contract, so the heal never races an in-flight
     * install. */
   private def healReassign(spark: SparkSession, indexDir: String): Unit = {
-    Seq("lists", "centroids", "stats")
-      .foreach(d => restoreBak(spark, s"$indexDir/$d"))
+    Seq("lists", "centroids", "stats").foreach { d =>
+      val (f, live) = fsPath(spark, s"$indexDir/$d")
+      graft.ops.FsPaths.restoreBak(f, live)
+    }
     val pending = s"$indexDir/centroids__pending"
     val (f, pp) = fsPath(spark, pending)
     if (f.exists(pp)) {
@@ -705,14 +707,6 @@ object VecIndex {
       if (pe.isDefined && pe == le) completePending(spark, indexDir)
       else f.delete(pp, true): Unit
     }
-  }
-
-  private def restoreBak(spark: SparkSession, live: String): Unit = {
-    val (f, liveP) = fsPath(spark, live)
-    val bakP = new org.apache.hadoop.fs.Path(live + "_bak")
-    if (!f.exists(liveP) && f.exists(bakP))
-      require(f.rename(bakP, liveP),
-        s"healReassign: could not restore $bakP to $liveP")
   }
 
   private def fsPath(spark: SparkSession, dir: String) = {
@@ -949,7 +943,7 @@ object VecIndex {
     cents.map { case (cid, v) => (cid, v.toSeq) }
       .toDF("centroid_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(tmp)
-    swapDir(spark, tmp, s"$indexDir/centroids")
+    graft.ops.FsPaths.swapDir(spark.sparkContext.hadoopConfiguration, tmp, s"$indexDir/centroids")
   }
 
   /** Exact per-list row counts from the just-written lists directory,
@@ -1001,7 +995,7 @@ object VecIndex {
     val tmp = s"$indexDir/stats__tmp"
     counts.select(col("list_id").cast("long"), col("n").cast("long"))
       .coalesce(1).write.mode("overwrite").parquet(tmp)
-    swapDir(spark, tmp, s"$indexDir/stats")
+    graft.ops.FsPaths.swapDir(spark.sparkContext.hadoopConfiguration, tmp, s"$indexDir/stats")
   }
 
   private def loadStatCounts(spark: SparkSession,
@@ -1014,19 +1008,5 @@ object VecIndex {
     }
     spark.read.parquet(s"$indexDir/stats")
       .as[(Long, Long)].collect().toMap
-  }
-
-  // live -> _bak, tmp -> live, drop _bak — the Store/Compaction swap
-  // discipline, crash-recoverable at every instant
-  private def swapDir(spark: SparkSession, tmp: String, live: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val liveP = new org.apache.hadoop.fs.Path(live)
-    val fs = liveP.getFileSystem(conf)
-    val bakP = new org.apache.hadoop.fs.Path(live + "_bak")
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    fs.delete(bakP, true)
-    if (fs.exists(liveP)) fs.rename(liveP, bakP)
-    fs.rename(tmpP, liveP)
-    fs.delete(bakP, true): Unit
   }
 }

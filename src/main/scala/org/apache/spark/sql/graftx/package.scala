@@ -36,27 +36,28 @@ package object graftx {
 
   /** Read a hive-partitioned parquet directory the way
     * `spark.read.parquet` resolves it — one file listing, one footer
-    * job — with two differences: the partition column is declared a
-    * string (values like "1.1" stay strings without touching the
-    * session-wide type-inference conf), and the data schema is the union
-    * of every file's footer schema (`mergeSchema`), not the first
-    * file's. A public `.schema(...)` read would need the merged schema
-    * up front and so a second listing. */
+    * job — with two differences: the partition columns are declared
+    * strings (values like "1.1" stay strings, and a rewrite keeps every
+    * directory name as it is, without touching the session-wide
+    * type-inference conf), and the data schema is the union of every
+    * file's footer schema (`mergeSchema`), not the first file's. A
+    * public `.schema(...)` read would need the merged schema up front
+    * and so a second listing. */
   def readPartitionedParquet(spark: SparkSession, path: String,
-                             partitionCol: String): DataFrame = {
+                             partitionCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val s = spark.asInstanceOf[classic.SparkSession]
     val index = new InMemoryFileIndex(s, Seq(new org.apache.hadoop.fs.Path(path)),
-      Map.empty, Some(StructType(Seq(StructField(partitionCol, StringType)))))
+      Map.empty, Some(StructType(partitionCols.map(StructField(_, StringType)))))
     val format = new ParquetFileFormat
     val merged = format.inferSchema(s, Map("mergeSchema" -> "true"), index.allFiles())
       .getOrElse(throw new IllegalArgumentException(s"no parquet files under $path"))
     // nullable like every file-source read: a merged column is absent
     // (null) in the files of tables that lack it
     s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      StructType(merged.filterNot(_.name == partitionCol)).asNullable, None, format,
+      StructType(merged.filterNot(f => partitionCols.contains(f.name))).asNullable, None, format,
       Map.empty)(s))
   }
 }

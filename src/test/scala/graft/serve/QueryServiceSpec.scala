@@ -51,6 +51,66 @@ class QueryServiceSpec extends AnyFunSuite {
     assert(all == Set(0, 1, 2, 3))
   }
 
+  test("a keyset walk whose page ends inside a sheet row returns every record once, in order") {
+    val root = Files.createTempDirectory("graft_qs_walk_").toString
+    val st = new Store(spark, root, "dukes")
+    st.initialize()
+    // three melted years per sheet row: a limit of 4 splits rows
+    val records = for (r <- 0 until 5; y <- 2019 to 2021) yield (r, y, s"l$r", r * 10.0 + y)
+    st.ingest(records.toDF("row", "year", "label", "value"), "1.1")
+    st.stage()
+    val qs = new QueryService(spark, st)
+    def keys(p: QueryService.Page) = p.data.select("row", "year").as[(Int, Int)].collect()
+    var page = qs.query("1.1", limit = 4)
+    val walked = scala.collection.mutable.ArrayBuffer.from(keys(page))
+    while (page.nextCursor.isDefined && walked.size <= records.size) {
+      page = qs.query("1.1", limit = 4, cursor = page.nextCursor)
+      walked ++= keys(page)
+    }
+    assert(walked.toSeq == records.map(r => (r._1, r._2)))
+  }
+
+  test("no session-wide conf changes while stage, stageIncremental, vacuum and compactZone run beside queries") {
+    val root = Files.createTempDirectory("graft_qs_confs_").toString
+    val st = new Store(spark, root, "dukes")
+    st.initialize()
+    def frame(v: Double) = Seq((0, "Coal", 2019, "Gas", v), (1, "Oil", 2020, "Coal", v))
+      .toDF("row", "label", "year", "fuel", "value")
+    st.ingest(frame(1.0), "1.1")
+    st.ingest(frame(2.0), "2.1")
+    st.stage()
+    val keys = Seq("spark.sql.sources.partitionColumnTypeInference.enabled",
+      "spark.sql.sources.partitionOverwriteMode")
+    val initial = keys.map(spark.conf.getOption)
+    val changed = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val watcher = new Thread(() =>
+      while (!done.get()) {
+        keys.zip(initial).foreach { case (k, v) =>
+          if (spark.conf.getOption(k) != v) changed.compareAndSet(null, k)
+        }
+        Thread.onSpinWait()
+      })
+    val qs = new QueryService(spark, st)
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        // a read may land inside a swap; only the confs are judged here
+        try qs.query("2.1").data.count() catch { case _: Exception => () }
+      })
+    try {
+      watcher.start()
+      reader.start()
+      st.ingest(frame(3.0), "1.1")
+      assert(st.stageIncremental() == Seq("1.1"))
+      st.stage()
+      assert(st.vacuum(retainVersions = 1) == Seq(1L))
+      st.compactZone("raw")
+      st.compactZone("prod")
+    } finally { done.set(true); watcher.join(); reader.join() }
+    assert(changed.get() == null, s"a store verb changed the session-wide ${changed.get()}")
+    assert(qs.query("1.1").data.select("value").as[Double].collect().toSeq == Seq(3.0, 3.0))
+  }
+
   test("queries see fresh data after a re-stage (no stale file listing)") {
     val root = Files.createTempDirectory("graft_qs_restage_").toString
     val st = new Store(spark, root, "dukes")

@@ -361,6 +361,129 @@ class StoreSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${st.rawPath}/_bak_table_name=b")))
   }
 
+  private def ts(s: String) = Timestamp.valueOf(s)
+
+  private def tables(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("table_name").distinct().as[String].collect().sorted.toSeq
+
+  test("an as-of incremental stage removes a table with no ingest at or before the cutoff") {
+    val st = freshStore()
+    st.ingest(frame(1), "a", ingestTs = ts("2026-01-01 00:00:00"))
+    st.ingest(frame(2), "b", ingestTs = ts("2026-01-03 00:00:00"))
+    st.stage()
+    assert(st.stageIncremental(Some(ts("2026-01-02 00:00:00"))) == Seq("b"))
+    assert(tables(st.readProd()) == Seq("a"))
+    assert(tables(st.readMetadata()) == Seq("a"))
+    assert(!new java.io.File(s"${st.prodPath}/table_name=b").exists())
+    val qs = new graft.serve.QueryService(spark, st)
+    val e = intercept[IllegalArgumentException](qs.query("b"))
+    assert(e.getMessage.contains("not staged"))
+    assert(qs.query("a").data.count() == 2)
+    // without the cutoff b wins again
+    assert(st.stageIncremental() == Seq("b"))
+    assert(tables(st.readProd()) == Seq("a", "b"))
+    assert(tables(st.readMetadata()) == Seq("a", "b"))
+    assert(qs.query("b").data.select("version").as[Int].collect().toSeq == Seq(2, 2))
+    assert(st.stageIncremental() == Nil)
+  }
+
+  test("a full stage and stage -> ingest -> incremental stage leave identical PROD and metadata rows") {
+    // melted records: several years per sheet row; the revision of b
+    // brings a column no earlier ingest had
+    def melted(v: Int, rows: Int) =
+      (for (r <- 0 until rows; y <- 2020 to 2022) yield (r, y, s"l${r % 2}", v * 10.0 + r))
+        .toDF("row", "year", "label", "value")
+    val revised = melted(3, 4).withColumn("sector", when(col("row") % 2 === 0, lit("industry")))
+    def load(st: Store, staged: Boolean): Unit = {
+      st.ingest(melted(1, 3), "a", ingestTs = ts("2026-01-01 00:00:00"))
+      st.ingest(melted(2, 3), "b", ingestTs = ts("2026-01-01 00:00:00"))
+      if (staged) st.stage()
+      st.ingest(revised, "b", ingestTs = ts("2026-01-02 00:00:00"))
+      if (staged) assert(st.stageIncremental() == Seq("b"))
+      else st.stage()
+    }
+    val full = freshStore(); load(full, staged = false)
+    val incr = freshStore(); load(incr, staged = true)
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      val cols = df.columns.sorted.toSeq
+      df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    }
+    assert(full.readProd().columns.sorted.toSeq == incr.readProd().columns.sorted.toSeq)
+    assert(rows(full.readProd()) == rows(incr.readProd()))
+    assert(full.readProd().count() == 9 + 12)
+    assert(rows(full.readMetadata()) == rows(incr.readMetadata()))
+    assert(full.readMetadata().where(col("table_name") === "a" && col("column_name") === "sector")
+      .select("n_non_nulls").as[Long].collect().toSeq == Seq(0L))
+  }
+
+  test("prod partition-swap crash windows heal on the next read") {
+    val st = freshStore()
+    st.ingest(frame(1), "a", ingestTs = ts("2026-01-01 00:00:00"))
+    st.ingest(frame(7), "b", ingestTs = ts("2026-01-01 00:00:00"))
+    st.stage()
+    val fs = new org.apache.hadoop.fs.Path(st.prodPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dir(name: String) = new org.apache.hadoop.fs.Path(s"${st.prodPath}/$name")
+    // window 1: crash after the live partition moved aside, before the
+    // staged copy moved in
+    assert(fs.rename(dir("table_name=a"), dir("_bak_table_name=a")))
+    assert(st.readProd().where(col("table_name") === "a").count() == 2)
+    assert(!fs.exists(dir("_bak_table_name=a")))
+    // window 2: the swap finished but its cleanup was lost
+    fs.mkdirs(dir("_bak_table_name=b"))
+    assert(st.isStaged)
+    assert(!fs.exists(dir("_bak_table_name=b")))
+    assert(st.readProd().select("table_name", "version").as[(String, Int)].collect().toSet ==
+      Set(("a", 1), ("b", 7)))
+    // a re-stage over the healed zone
+    st.ingest(frame(2), "a", ingestTs = ts("2026-01-02 00:00:00"))
+    assert(st.stageIncremental() == Seq("a"))
+    assert(st.readProd().where(col("table_name") === "a").select("version").as[Int]
+      .collect().toSeq == Seq(2, 2))
+  }
+
+  test("a partition backup seen while another thread holds the lease is a swap in flight: hidden from reads, not healed") {
+    val st = freshStore()
+    st.ingest(frame(1), "a", ingestTs = ts("2026-01-01 00:00:00"))
+    st.ingest(frame(7), "b", ingestTs = ts("2026-01-01 00:00:00"))
+    st.stage()
+    val root = new java.io.File(st.rawPath).getParent
+    val live = new java.io.File(s"${st.prodPath}/table_name=a")
+    val bak = new java.io.File(s"${st.prodPath}/_bak_table_name%3Da")
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val writer = new Thread(() => graft.ops.Lease.withHeld(spark, root, what = "writer") {
+      held.countDown(); release.await()
+    })
+    writer.start()
+    try {
+      held.await()
+      // the writer's swap has moved the live partition aside
+      assert(live.renameTo(bak))
+      assert(tables(st.readProd()) == Seq("b"))
+      assert(bak.exists() && !live.exists())
+    } finally { release.countDown(); writer.join() }
+    assert(tables(st.readProd()) == Seq("a", "b"))
+    assert(!bak.exists())
+  }
+
+  test("a RAW zone left mid-compaction heals before reads and ingests") {
+    val st = freshStore()
+    st.ingest(frame(1), "a", ingestTs = ts("2026-01-01 00:00:00"))
+    val fs = new org.apache.hadoop.fs.Path(st.rawPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // crash between compactZone's two renames: live RAW moved to _bak
+    assert(fs.rename(new org.apache.hadoop.fs.Path(st.rawPath),
+      new org.apache.hadoop.fs.Path(st.rawPath + "_bak")))
+    st.ingest(frame(7), "b", ingestTs = ts("2026-01-02 00:00:00"))
+    assert(tables(st.snapshot()) == Seq("a", "b"))
+    st.stage()
+    assert(tables(st.readProd()) == Seq("a", "b"))
+    st.compactZone("raw")
+    assert(st.readRaw().count() == 4)
+    assert(tables(st.snapshot()) == Seq("a", "b"))
+  }
+
   test("row-less multi-partition frame stages with collision-free row_uids") {
     val st = freshStore()
     // no `row` column, spread across many partitions so the fallback path
