@@ -23,6 +23,33 @@ import org.apache.spark.sql.SparkSession
   * can separate plan changes from host noise without forensics.
   */
 object Bench {
+
+  /** Run one query's `work` on a daemon thread in job group
+    * `bench-<name>`, waiting at most `timeoutMs`. A query still running
+    * then is cancelled and its thread joined (up to 30 s), so it cannot
+    * overlap the next query. Returns the elapsed seconds, taken before
+    * that join, and whether `work` completed: a query that throws (or
+    * times out) must NOT masquerade as a fast success. */
+  private[graft] def runTimed(spark: SparkSession, name: String, timeoutMs: Long)(
+      work: => Unit): (Double, Boolean) = {
+    val t0 = System.nanoTime()
+    @volatile var ok = false
+    val t = new Thread(() =>
+      try {
+        spark.sparkContext.setJobGroup(s"bench-$name", name,
+          interruptOnCancel = true)
+        work
+        ok = true
+      } catch { case _: Throwable => () })
+    t.setDaemon(true)
+    t.start()
+    t.join(timeoutMs)
+    if (t.isAlive) spark.sparkContext.cancelJobGroup(s"bench-$name")
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    if (t.isAlive) t.join(30000)
+    (elapsed, ok)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -56,22 +83,7 @@ object Bench {
 
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      // a query that throws (or times out) must NOT masquerade as a fast
-      // success — record per-query ok and surface it in the JSON
-      @volatile var ok = false
-      val t = new Thread(() =>
-        try {
-          spark.sparkContext.setJobGroup(s"bench-$name", name,
-            interruptOnCancel = true)
-          fn(spark, sfDir).count(): Unit
-          ok = true
-        } catch { case _: Throwable => () })
-      t.setDaemon(true)
-      t.start()
-      t.join(timeoutSec * 1000)
-      if (t.isAlive) spark.sparkContext.cancelJobGroup(s"bench-$name")
-      val elapsed = (System.nanoTime() - t0) / 1e9
+      val (elapsed, ok) = runTimed(spark, name, timeoutSec * 1000)(fn(spark, sfDir).count(): Unit)
       // localCheckpoint()ed frames register as persistent RDDs and live
       // until GC; across ~100 queries in one session the accumulated
       // blocks caused eviction churn that quadrupled later dedup queries.

@@ -18,9 +18,10 @@ import graft.model.CanonicalSchema
   *   6. duplicate composite keys (all columns minus working cols `row`,
   *      `label` and `value`) are an error (validation.py:88-101).
   *
-  * All checks run in ONE aggregation pass over the frame (counts per
-  * column + a groupBy-count limit-1 probe for dup keys) — no per-column
-  * jobs, so the validation cost stays a single scan at 100 TB.
+  * All checks run as ONE action over the frame: a groupBy on the
+  * composite key carrying the per-column counts, then one global
+  * aggregate — no per-column jobs and no second run of the transform that
+  * feeds it, so the validation cost stays a single scan at 100 TB.
   */
 object Validate {
 
@@ -39,22 +40,31 @@ object Validate {
 
     // 3. coerce dtypes; track which columns had any non-null BEFORE coercion
     val targetFields = schema.fields.filter(f => stamped.columns.contains(f.name))
-    val coerced = stamped.select(targetFields.map { f =>
-      expr(s"try_cast(`${f.name}` AS ${f.dataType.sql})").as(f.name)
-    }.toIndexedSeq: _*)
+    def cast(f: StructField): Column = expr(s"try_cast(`${f.name}` AS ${f.dataType.sql})")
+    val coerced = stamped.select(targetFields.map(f => cast(f).as(f.name)).toIndexedSeq: _*)
 
-    // one aggregation pass: total rows + per-column non-null counts, both
-    // before (raw) and after (coerced) coercion
-    val preCounts = targetFields.map(f => count(stamped(f.name)).as(s"pre_${f.name}"))
-    val aggRow = stamped.agg(count(lit(1)).as("n_rows"), preCounts.toIndexedSeq: _*).head()
-    val nRows = aggRow.getLong(0)
-    val postRow = coerced.agg(
-      count(lit(1)).as("n_rows"),
-      targetFields.map(f => count(col(f.name)).as(s"post_${f.name}")).toIndexedSeq: _*).head()
+    // every check in one action: the rows grouped by their coerced
+    // composite key (6), each group with its row count and per-column
+    // non-null counts before (raw) and after coercion (4, 5); one global
+    // aggregate then sums the counts and keeps the largest group
+    val keyCols = targetFields.map(_.name).filterNot(c =>
+      CanonicalSchema.workingColumns.contains(c) || c == "value" || c == "ingest_id")
+    val counted = targetFields.indices.flatMap(i => Seq(s"__pre$i", s"__post$i"))
+    val keyed = stamped.select(
+      (targetFields.filter(f => keyCols.contains(f.name)).map(f => cast(f).as(f.name)) ++
+        targetFields.indices.flatMap { i =>
+          Seq(stamped(targetFields(i).name).as(s"__pre$i"), cast(targetFields(i)).as(s"__post$i"))
+        }).toIndexedSeq: _*)
+    val groups = keyed.groupBy(keyCols.map(c => keyed(c)).toIndexedSeq: _*)
+      .agg(count(lit(1)).as("__n"), counted.map(c => count(col(c)).as(c)): _*)
+    val totals = groups.agg(
+      coalesce(sum(col("__n")), lit(0L)), coalesce(max(col("__n")), lit(0L)) +:
+        counted.map(c => coalesce(sum(col(c)), lit(0L))): _*).head()
+    val nRows = totals.getLong(0)
 
     targetFields.zipWithIndex.foreach { case (f, i) =>
-      val pre = aggRow.getLong(i + 1)
-      val post = postRow.getLong(i + 1)
+      val pre = totals.getLong(2 + 2 * i)
+      val post = totals.getLong(3 + 2 * i)
       // 4. coercion destroyed a populated column
       if (pre > 0 && post == 0)
         throw ValidationError(
@@ -66,11 +76,7 @@ object Validate {
     }
 
     // 6. duplicate composite keys
-    val keyCols = coerced.columns.filterNot(c =>
-      CanonicalSchema.workingColumns.contains(c) || c == "value" || c == "ingest_id")
-    val dup = coerced.groupBy(keyCols.map(col).toIndexedSeq: _*)
-      .agg(count(lit(1)).as("n")).where(col("n") > 1).limit(1)
-    if (!dup.isEmpty)
+    if (totals.getLong(1) > 1)
       throw ValidationError(s"duplicate composite keys in '$tableName' on (${keyCols.mkString(", ")})")
 
     coerced

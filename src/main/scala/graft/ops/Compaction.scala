@@ -45,11 +45,24 @@ object Compaction {
   }
 
   /** Number of output files a compaction of `dir` to `targetBytes` would
-    * produce — the planning half, callable without touching data. */
+    * produce — the planning half, callable without touching data:
+    * ceil(input bytes / targetBytes), at least one, and at most one file
+    * per [[ScanPrune.PageRowLimit]] input rows (counted from the parquet
+    * footers, on the driver). A file below one page of rows gives page
+    * skipping nothing to prune, and a plan finer than that only adds
+    * tasks: a tiny `targetBytes` would otherwise plan one shuffle
+    * partition per input byte. */
   def planFiles(spark: SparkSession, dir: String, targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val bytes = dataFiles(spark, dir).map(_._2).sum
-    math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    val files = dataFiles(spark, dir)
+    val byBytes = math.max(1L, math.ceil(files.map(_._2).sum.toDouble / targetBytes).toLong)
+    if (byBytes == 1L) 1
+    else {
+      val p = new Path(dir)
+      val rows = FsPaths.parquetRows(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        files.map(f => new Path(f._1)))
+      math.max(1L, math.min(byBytes, math.ceil(rows.toDouble / ScanPrune.PageRowLimit).toLong)).toInt
+    }
   }
 
   /** Rewrite `dir` in place into ~targetBytes parquet files; returns

@@ -74,6 +74,16 @@ object FsPaths {
     out.result().sorted
   }
 
+  /** Rows in the parquet `files`, summed from their footers: driver-side
+    * reads, no Spark job. */
+  def parquetRows(fs: org.apache.hadoop.fs.FileSystem,
+                  files: Seq[org.apache.hadoop.fs.Path]): Long =
+    files.iterator.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, fs.getConf))
+      try r.getRecordCount finally r.close()
+    }.sum
+
   /** (count, total bytes) of COMMITTED part files under `dir` — the
     * same walk as [[committedPartCount]] with the byte sum the
     * byte-aware maintenance policies key on: N files of 1 MB and N

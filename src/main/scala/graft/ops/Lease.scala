@@ -205,6 +205,10 @@ object Lease {
     }
     val parent = p.getParent
     if (!f.exists(parent)) f.mkdirs(parent): Unit
+    // the body is built before the create: holder() can be slow on its
+    // first call (host name lookup), and the marker reads as empty until
+    // the write below lands
+    val body = leaseBody()
     // overwrite = false: of two racing acquirers exactly one creates —
     // the loser's IOException becomes the same refusal contract
     val out =
@@ -215,7 +219,7 @@ object Lease {
             "concurrent writer (the marker appeared between the check " +
             "and the exclusive create).", e)
       }
-    try out.write(leaseBody()) finally out.close()
+    try out.write(body) finally out.close()
     // check-after-write: on stores without atomic create-exclusive two
     // racers can both reach the write — the surviving content decides,
     // and every non-winner refuses here instead of proceeding to write
@@ -278,16 +282,19 @@ object Lease {
     * a writer that sees `false` after having acquired was reclaimed as
     * stale (a >TTL GC pause / partition) and MUST stop writing (the
     * fencing check [[graft.streaming.StreamOps.curationPipelineStart]]
-    * runs per batch). Indeterminate IO errors return `true` — a
-    * transient fs blip must not abort a live writer; the next beat
-    * re-checks. */
+    * runs per batch). An indeterminate read (an IO error, or a marker
+    * whose body is not written yet) returns `true` only for a dir this
+    * process acquired — a transient fs blip must not abort a live
+    * writer; the next beat re-checks — and `false` otherwise: a process
+    * that never acquired the lease cannot hold it, and the empty marker
+    * is another process's acquire in flight. */
   def heartbeatIfHeld(conf: Configuration, dir: String): Boolean = {
     val f = fsFor(conf, dir)
     val p = path(dir)
     try {
       if (!f.exists(p)) return false // positively absent
       val h = readLease(f, p)._1
-      if (h == "unknown") return true // indeterminate: retry next beat
+      if (h == "unknown") return acquiredHere(dir) // indeterminate: retry next beat
       if (h != holder()) return false // positively foreign: fence
       val now = System.currentTimeMillis()
       f.setTimes(p, now, -1)
@@ -311,7 +318,7 @@ object Lease {
         try out.write(leaseBody()) finally out.close()
         readLease(f, p)._1 == holder()
       } else true
-    } catch { case _: java.io.IOException => true } // indeterminate
+    } catch { case _: java.io.IOException => acquiredHere(dir) } // indeterminate
   }
 
   /** Heartbeat + self-fence in one call — the per-batch discipline for

@@ -105,11 +105,12 @@ final class Facade(spark: SparkSession, root: String, collection: String) {
             cursor: Option[Long] = None): QueryService.Page =
     queryService.query(table, filtersJson, limit, cursor)
 
-  /** Export one table or the whole collection. */
+  /** Export one table or the whole collection, read through the serving
+    * view: no listing or schema job per call. */
   def exportTable(table: String, outDir: String, format: String = "csv"): String =
-    Export.exportTable(store.readProd(), collection, table, outDir, format)
+    queryService.withView(v => Export.exportTable(v.prod, collection, table, outDir, format))
   def exportAll(outDir: String, format: String = "csv"): Seq[String] =
-    Export.exportAll(store.readProd(), collection, outDir, format)
+    queryService.withView(v => Export.exportAll(v.prod, collection, outDir, format))
 
   /** Info report: per staged table, ingest provenance + year range + row
     * count (reference: process.py:318-390, the A3 aggregate). */

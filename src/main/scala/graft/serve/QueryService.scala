@@ -52,15 +52,20 @@ final class QueryService(spark: SparkSession, store: Store) {
 
   def query(tableName: String, filtersJson: String = "{}",
             limit: Int = DefaultLimit, cursor: Option[Long] = None,
-            cols: Option[Seq[String]] = None): Page = {
+            cols: Option[Seq[String]] = None): Page =
+    withView(page(_, tableName, filtersJson, limit, cursor, cols))
+
+  /** Run `read` over the current view. When the view's listing went stale
+    * (PROD files replaced before the marker swap) the read fails on a
+    * missing file: the view is resolved again, once, and the read
+    * retried. */
+  def withView[A](read: StagedView => A): A = {
     val v = view
-    try page(v, tableName, filtersJson, limit, cursor, cols)
+    try read(v)
     catch {
-      // the view's listing went stale (PROD files replaced before the
-      // marker swap): resolve again, once, and retry
       case e: Exception if QueryService.missingFile(e) =>
         synchronized { if (current eq v) current = null }
-        page(view, tableName, filtersJson, limit, cursor, cols)
+        read(view)
     }
   }
 

@@ -2,9 +2,12 @@ package graft.store
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, RowOrdering}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,14 +23,24 @@ import graft.ops.FsPaths
   *   {root}/{collection}_prod/         PROD snapshot, partitioned by
   *                                     table_name; staging replaces whole
   *                                     table partitions
-  *   {root}/_ingest_log/               provenance (small)
-  *   {root}/_metadata_{collection}/    per-column stats (small)
-  *   {root}/_stage_state_{collection}/ stage commit marker (small)
+  *   {root}/_ingest_log/               provenance, shared by every
+  *                                     collection under the root: per
+  *                                     ingest `<id>.begin` (its log row as
+  *                                     JSON) and, once the RAW append has
+  *                                     landed, an empty `<id>.commit`
+  *   {root}/_metadata_{collection}/    per-column stats: one `<n>.meta`
+  *                                     file, the rows as JSON
+  *   {root}/_stage_state_{collection}/ stage commit marker: one
+  *                                     `<n>.marker` file, each staged
+  *                                     table's winning ingest id as JSON
   *
   * Mirrors the reference's SQLite zones (read_write.py:267-404) but scales:
-  * RAW appends are partitioned parquet writes, the snapshot is a window
-  * dedup over a broadcast ingest log, and table_name partitioning gives the
-  * query layer pruned directory scans instead of full-table WHERE filters.
+  * RAW appends are partitioned parquet writes, the snapshot is a broadcast
+  * join of RAW with the winners the driver picks from the log, and
+  * table_name partitioning gives the query layer pruned directory scans
+  * instead of full-table WHERE filters. The log, the metadata and the
+  * marker are small driver-side files, read from one directory listing
+  * and written with exclusive creates: no Spark job keeps the books.
   */
 /** @param exactStatsMaxRows row-count threshold for the metadata pass:
   *   tables at or under it get exact `countDistinct` (mirrors the
@@ -50,10 +63,10 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * ([[graft.ops.Lease.withHeld]]): the reference documents a
     * single-writer assumption (sqlite autoincrement, utils.py:194) that
     * used to bind here purely by call discipline — but the backup swaps
-    * of the log, PROD, metadata and RAW partitions are not
-    * concurrent-safe against a SECOND PROCESS
-    * (two CLI invocations racing a stage would interleave renames, and
-    * two ingests would read the same max ingest_id). The lease is at
+    * of PROD and RAW partitions are not concurrent-safe against a SECOND
+    * PROCESS (two CLI invocations racing a stage would
+    * interleave renames, and two ingests would take the same next
+    * ingest id). The lease is at
     * the ROOT because the ingest log is shared across collections under
     * one root — ingest-id uniqueness is a root-wide contract. A live
     * foreign lease refuses loudly; a stale one (crashed writer) is
@@ -77,14 +90,11 @@ final class Store(spark: SparkSession, root: String, collection: String,
   private def fs: FileSystem = path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def exists(dir: String): Boolean = FsPaths.nonEmpty(fs, path(dir))
 
-  /** Publish a freshly written `tmp` directory as `live`
-    * ([[FsPaths.swapDir]]); [[heal]] resolves its crash window. */
-  private def swapIn(tmp: String, live: String): Unit = FsPaths.swapDir(fs, path(tmp), path(live))
-
-  /** The one heal of every swapped directory (log, metadata, marker and
-    * both zones): restore a whole-directory backup (a crash inside
-    * [[swapIn]] or [[compactZone]]) and the per-partition backups of
-    * staging and [[vacuum]] ([[FsPaths.healZone]]). Read verbs run
+  /** The one heal of every swapped directory: restore a whole-directory
+    * backup (a crash inside [[compactZone]], or a log or metadata
+    * directory left mid-swap by the earlier parquet format) and the
+    * per-partition backups of staging and [[vacuum]]
+    * ([[FsPaths.healZone]]). Read verbs run
     * lease-free, so a heal takes the writer lease first: a backup seen
     * while another writer holds it is that writer's swap in flight, not
     * a crash, and healing it would race the swap's second rename. */
@@ -128,64 +138,102 @@ final class Store(spark: SparkSession, root: String, collection: String,
   // ------------------------------------------------------------ bootstrap
 
   /** Idempotent init (reference: bootstrap.py:8-44). Parquet needs no DDL;
-    * we only ensure the log exists so readers never hit a missing path.
-    * Recovery MUST run first: after a crash inside the log swap the live
-    * log is missing but the backup holds the real provenance — writing a
-    * fresh empty log here would bury it and let ingest ids be reused. */
+    * we only ensure the log directory exists. Recovery MUST run first:
+    * after a crash inside a swap of the log directory the live log is
+    * missing but the backup holds the real provenance — starting a fresh
+    * empty log here would bury it and let ingest ids be reused. */
   def initialize(): Unit = withWriterLease("initialize") {
-    // leased like every mutating verb: a second process's bootstrap
-    // racing a first-ever ingest could otherwise pass its exists check
-    // before the ingest's log row lands and bury it under a fresh
-    // empty log (the overwrite deletes the dir first)
     heal(logPath)
-    if (!exists(logPath)) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], logSchema)
-        .write.mode("overwrite").parquet(logPath)
-    }
+    fs.mkdirs(path(logPath)): Unit
   }
 
   def isStaged: Boolean = { heal(prodPath); exists(prodPath) }
 
   // ---------------------------------------------------------- ingest path
 
-  /** The ingest log, its swap crash window healed first: the reference
-    * gets this atomicity for free from SQLite; on a filesystem the
-    * backup swap is the equivalent. */
-  def readLog(): DataFrame = {
+  /** Names in a directory (none when it is missing), from one listing. */
+  private def listNames(dir: String): Seq[String] =
+    try fs.listStatus(path(dir)).toSeq.map(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  private def logFile(id: Long, suffix: String) = new Path(logPath, s"$id$suffix")
+
+  /** One listing of the log (its backup-swap crash window healed first):
+    * the ids that took a `.begin` file, ascending, and the committed ids.
+    * A log in the earlier single-parquet format is refused, not converted. */
+  private def listLog(): (Seq[Long], Set[Long]) = {
     heal(logPath)
-    if (exists(logPath)) spark.read.schema(logSchema).parquet(logPath)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logSchema)
+    val names = listNames(logPath)
+    if (names.exists(_.endsWith(".parquet")))
+      throw new IllegalStateException(s"the ingest log at $logPath is in the " +
+        "earlier parquet format, which this store does not read: re-ingest into a new root")
+    (names.flatMap(numbered(_, BeginSuffix)).sorted, names.flatMap(numbered(_, CommitSuffix)).toSet)
   }
 
-  /** Replace the (tiny, driver-held) log with `rows` through a backup
-    * swap, never leaving a window with no recoverable log. */
-  private def rewriteLog(rows: Array[Row]): Unit = {
-    val tmp = p("_ingest_log_tmp")
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), logSchema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    swapIn(tmp, logPath)
+  /** Every log entry, from one listing and the `.begin` bodies. A begin
+    * file still being written belongs to an ingest in flight, which is
+    * uncommitted: while its body is unreadable it is left out. */
+  private def logEntries(): Seq[LogEntry] = {
+    val (begun, committed) = listLog()
+    begun.flatMap { id =>
+      try Some(LogEntry.decode(id, readFile(logFile(id, BeginSuffix)), committed(id)))
+      catch { case _: Exception if !committed(id) => None }
+    }
   }
 
-  /** Next ingest id: max+1 read-modify-write on the driver. Single-writer
-    * assumption, same as the reference's sqlite autoincrement
-    * (utils.py:194; SURVEY.md §7.4 risk 3). */
-  def nextIngestId(): Long = {
-    val m = readLog().agg(max("ingest_id")).head()
-    if (m.isNullAt(0)) 1L else m.getLong(0) + 1L
+  private def readFile(p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
   }
+
+  /** Create `p` holding `body`; refuses an existing file. */
+  private def createFile(p: Path, body: Array[Byte]): Unit = {
+    val out = fs.create(p, false)
+    try out.write(body) finally out.close()
+  }
+
+  /** Publish `body` as the next `<n><suffix>` file of `dir`: its exclusive
+    * create is the commit, then every earlier entry goes. Readers take
+    * the highest `n` ([[latestFile]]), so a crash between the two steps
+    * is harmless, and every publish adds a new file name. */
+  private def publishFile(dir: String, suffix: String, body: Array[Byte]): Unit = {
+    val old = listNames(dir)
+    val next = old.flatMap(numbered(_, suffix)).maxOption.fold(1L)(_ + 1L)
+    createFile(new Path(dir, s"$next$suffix"), body)
+    old.foreach(n => fs.delete(new Path(dir, n), true))
+  }
+
+  /** The body of the highest-numbered `<n><suffix>` file of `dir`. Reads
+    * are lease-free: a publish may delete the listed file before it is
+    * opened, and then the listing is taken again. */
+  private def latestFile(dir: String, suffix: String, tries: Int = 3): Option[Array[Byte]] =
+    try listNames(dir).flatMap(numbered(_, suffix)).maxOption.map(n => readFile(new Path(dir, s"$n$suffix")))
+    catch { case _: java.io.FileNotFoundException if tries > 1 => latestFile(dir, suffix, tries - 1) }
+
+  /** The ingest log as a driver-local frame (no Spark job to build it). */
+  def readLog(): DataFrame = frame(logEntries().map(_.row), logSchema)
+
+  private def frame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Next ingest id: one past the highest id that ever took a `.begin`
+    * file, committed or not. Single-writer assumption, same as the
+    * reference's sqlite autoincrement (utils.py:194; SURVEY.md §7.4 risk
+    * 3): callers hold the writer lease. */
+  def nextIngestId(): Long = listLog()._1.lastOption.fold(1L)(_ + 1L)
 
   /** Transactional-ish RAW append (reference: ingest_frame,
-    * read_write.py:267-337): log row first with success=0, then the data
-    * append tagged with ingest_id, then flip success=1. A crash mid-append
-    * leaves success=0 and the staging join ignores the partial data — this
-    * ordering is the crash-safety story and is preserved exactly. */
+    * read_write.py:267-337): the exclusive create of `<id>.begin` takes
+    * the id, then the data append tagged with ingest_id, then
+    * `<id>.commit` is the success flip. A crash mid-append leaves the
+    * ingest uncommitted and the staging join ignores the partial data —
+    * this ordering is the crash-safety story and is preserved exactly. */
   def ingest(df: DataFrame, tableName: String, url: String = "",
              description: String = "",
              ingestTs: Timestamp = new Timestamp(System.currentTimeMillis())): Long =
     // the lease spans id allocation through the success flip: two racing
-    // ingests in different processes would otherwise both read the same
-    // max ingest_id and tag DISTINCT data with ONE id
+    // ingests in different processes would otherwise both take the same
+    // next id and tag DISTINCT data with ONE id
     withWriterLease("ingest") {
       // an append into a zone left mid-compaction would start a fresh
       // RAW beside the backup that holds every earlier ingest
@@ -195,24 +243,15 @@ final class Store(spark: SparkSession, root: String, collection: String,
       df.withColumn("ingest_id", lit(id))
         .withColumn("table_name", lit(tableName))
         .write.mode("append").partitionBy("table_name").parquet(rawPath)
-      setLogSuccess(id)
+      createFile(logFile(id, CommitSuffix), Array.emptyByteArray)
       id
     }
 
   private[store] def appendLogRow(id: Long, ts: Timestamp, tableName: String,
                            url: String, description: String, success: Int): Unit = {
-    val row = Row(id, ts, collection, tableName, url, description, success)
-    spark.createDataFrame(java.util.List.of(row), logSchema)
-      .write.mode("append").parquet(logPath)
-  }
-
-  /** Rewrite of the small log flipping one row's success flag. */
-  private def setLogSuccess(id: Long): Unit = {
-    val updated = readLog()
-      .withColumn("success",
-        when(col("ingest_id") === id, lit(1)).otherwise(col("success")))
-      .collect()  // log is tiny (one row per ingest); safe on the driver
-    rewriteLog(updated)
+    createFile(logFile(id, BeginSuffix),
+      LogEntry(id, micros(ts), collection, tableName, url, description, committed = false).encode)
+    if (success == 1) createFile(logFile(id, CommitSuffix), Array.emptyByteArray)
   }
 
   def readRaw(): DataFrame = {
@@ -224,34 +263,37 @@ final class Store(spark: SparkSession, root: String, collection: String,
 
   // ---------------------------------------------------------- staging path
 
-  /** The log rows every staged view is built from: successful ingests of
-    * this collection at or before the cutoff. */
-  private def committedLog(cutoff: Option[Timestamp]): DataFrame = {
-    val log = readLog().filter(col("success") === 1 && col("data_collection") === collection)
-    cutoff.fold(log)(ts => log.filter(col("ingest_ts") <= lit(ts)))
+  /** The log entries every staged view is built from: committed ingests
+    * of this collection at or before the cutoff. */
+  private def committedLog(cutoff: Option[Timestamp]): Seq[LogEntry] = {
+    val until = cutoff.map(micros)
+    logEntries().filter(e => e.committed && e.collection == collection &&
+      until.forall(e.tsMicros <= _))
   }
 
-  /** (table_name, ingest_id, ingest_ts) of each table's winning ingest:
-    * the latest committed one, ties broken by the higher id. */
-  private def winners(cutoff: Option[Timestamp]): DataFrame = {
-    val w = Window.partitionBy("table_name")
-      .orderBy(col("ingest_ts").desc, col("ingest_id").desc)
-    committedLog(cutoff).withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("table_name"), col("ingest_id"), col("ingest_ts"))
-  }
+  /** Each table's winning ingest: the latest committed one, ties broken by
+    * the higher id. */
+  private def winners(cutoff: Option[Timestamp]): Map[String, LogEntry] =
+    committedLog(cutoff).groupBy(_.table).map { case (t, es) => t -> es.maxBy(e => (e.tsMicros, e.id)) }
+
+  /** The RAW rows of the `won` ingests with their `ingest_ts`: an
+    * `ingest_id isin` filter that lets the parquet reader skip every other
+    * ingest's row groups, then a broadcast join with the winners. */
+  private def winnerRows(raw: DataFrame, won: Iterable[LogEntry]): DataFrame =
+    raw.where(col("ingest_id").isin(won.map(_.id).toSeq: _*))
+      .join(broadcast(frame(won.map(e => Row(e.id, e.ts)).toSeq, winnerSchema)), Seq("ingest_id"))
 
   /** The as-of snapshot frame: latest successful ingest per table_name with
     * ingest_ts <= cutoff (reference: raw_to_prod CTE, read_write.py:357-391,
     * written cleanly per SURVEY.md §7.4 risk 6).
     *
-    * Plan shape at scale: the log is tiny -> the winning (ingest_id,
-    * table_name) set is computed with one window over the broadcast log,
-    * then RAW joins it broadcast on ingest_id. No shuffle of RAW at all;
-    * partition pruning by table_name still applies downstream.
+    * Plan shape at scale: the winning (ingest_id, ingest_ts) set comes from
+    * the driver-side log, and RAW joins it broadcast on ingest_id. No
+    * shuffle of RAW at all; partition pruning by table_name still applies
+    * downstream.
     */
   def snapshot(cutoff: Option[Timestamp] = None): DataFrame =
-    readRaw().join(broadcast(winners(cutoff).drop("table_name")), Seq("ingest_id"))
+    winnerRows(readRaw(), winners(cutoff).values)
 
   /** SCD2 validity-interval history of one logical table: every row
     * version keyed by `keyCols`, with consecutive ingests that did NOT
@@ -272,8 +314,8 @@ final class Store(spark: SparkSession, root: String, collection: String,
               valueCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty && valueCols.nonEmpty,
       "history: keyCols and valueCols must be non-empty")
-    val log = committedLog(None).filter(col("table_name") === tableName)
-      .select(col("ingest_id"), col("ingest_ts"))
+    val log = frame(committedLog(None).filter(_.table == tableName)
+      .map(e => Row(e.id, e.ts)), winnerSchema)
     val seqd = log.withColumn("__seq", row_number().over(
       Window.orderBy(col("ingest_ts"), col("ingest_id"))))
     val rows = readRaw().where(col("table_name") === tableName)
@@ -308,7 +350,8 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * publication wins (snapshot). Same crash-safety: success=0 batches
     * are invisible. */
   def appendedRows(cutoff: Option[Timestamp] = None): DataFrame =
-    readRaw().join(broadcast(committedLog(cutoff).select("ingest_id")), Seq("ingest_id"), "left_semi")
+    readRaw().join(broadcast(frame(committedLog(cutoff).map(e => Row(e.id)), idSchema)),
+      Seq("ingest_id"), "left_semi")
 
   /** Materialize the as-of snapshot into PROD, every table rewritten, with
     * a stable `row_uid` for keyset pagination (reference rowid,
@@ -330,28 +373,31 @@ final class Store(spark: SparkSession, root: String, collection: String,
       // write leaves PROD updated but the marker stale, so the table is
       // re-done instead of its metadata staying stale forever
       marker.fold(winners.keySet)(m =>
-        winners.collect { case (t, (id, _)) if !m.get(t).contains(id) => t }.toSet)
+        winners.collect { case (t, e) if !m.get(t).contains(e.id) => t }.toSet)
     }
   }
 
   /** The one staging routine. The log is read once into the winner map
-    * (table -> ingest id and ts); `pick` chooses the tables to rewrite
-    * from it and the marker of the last completed stage (None when there
-    * is none, or no PROD). Every PROD partition, and every marker entry,
+    * (table -> winning ingest); `pick` chooses the tables to rewrite from
+    * it and the marker of the last completed stage (None when there is
+    * none, or no PROD). Every PROD partition, and every marker entry,
     * without a winner is removed: PROD holds exactly the winners.
     *
-    * Order of effects: the rewritten tables are written to a staging
-    * directory, then published partition by partition through
-    * [[FsPaths.swapPartitions]] (the zone heal restores any partition a
-    * crash leaves aside); the metadata is swapped in next and the marker
-    * LAST, so a crash anywhere leaves a stale marker and the next
-    * incremental stage re-does the affected tables — idempotent extra
-    * work, never silently stale metadata. Returns the tables rewritten or
-    * removed, sorted. */
+    * The rewritten tables' RAW slice is built once, by the write to a
+    * staging directory; their column stats are then computed over the
+    * staged files, and the exact/approx choice takes their row count from
+    * the parquet footers.
+    *
+    * Order of effects: the staged tables are published partition by
+    * partition through [[FsPaths.swapPartitions]] (the zone heal restores
+    * any partition a crash leaves aside); the metadata is swapped in next
+    * and the marker LAST, so a crash anywhere leaves a stale marker and
+    * the next incremental stage re-does the affected tables — idempotent
+    * extra work, never silently stale metadata. Returns the tables
+    * rewritten or removed, sorted. */
   private def restage(cutoff: Option[Timestamp])(
-      pick: (Map[String, (Long, Timestamp)], Option[Map[String, Long]]) => Set[String]): Seq[String] = {
-    val won = winners(cutoff).collect()   // tiny: one row per table
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getTimestamp(2)))).toMap
+      pick: (Map[String, LogEntry], Option[Map[String, Long]]) => Set[String]): Seq[String] = {
+    val won = winners(cutoff)
     val marker = if (isStaged) readStageState() else None
     val rewrite = pick(won, marker)
     val removed = (FsPaths.partitionValues(fs, path(prodPath), "table_name") ++
@@ -361,39 +407,38 @@ final class Store(spark: SparkSession, root: String, collection: String,
 
     val staging = prodPath + "_tmp"
     fs.delete(path(staging), true) // a crashed stage's leftovers never publish
-    val slice = if (rewrite.isEmpty) None else Some {
-      val ids = rewrite.toSeq.map(t => Row(won(t)._1, won(t)._2))
-      val df = withRowUid(readRaw()
-        .where(col("table_name").isin(rewrite.toSeq: _*))
-        .join(broadcast(spark.createDataFrame(java.util.Arrays.asList(ids: _*), winnerSchema)),
-          Seq("ingest_id")))
-      clusterForSkipping(df)
+    val fresh = if (rewrite.isEmpty) None else Some {
+      val slice = withRowUid(winnerRows(
+        readRaw().where(col("table_name").isin(rewrite.toSeq: _*)), rewrite.toSeq.map(won)))
+      clusterForSkipping(slice)
         .write.mode("overwrite").partitionBy("table_name").parquet(staging)
-      df
+      val rows = FsPaths.parquetRows(fs, FsPaths.committedPartPaths(fs, path(staging)).map(path))
+      val stats = columnStats(spark.read.schema(slice.schema).parquet(staging),
+        exact = rows <= exactStatsMaxRows).collect()
+      FreshStats(statColumns(slice), stats)
     }
     // a removed table has no staged partition: its swap only deletes
     FsPaths.swapPartitions(fs, path(staging), path(prodPath), "table_name", touched)
-    writeMetadata(slice, won.keySet -- rewrite)
-    writeStageState(won.map { case (t, (id, _)) => t -> id })
+    writeMetadata(fresh, won.keySet -- rewrite)
+    writeStageState(won.map { case (t, e) => t -> e.id })
     touched
   }
 
+  /** Publish the marker of a completed stage ([[publishFile]]). Every
+    * stage adds a new file name, which is what [[stageFingerprint]]
+    * sees. */
   private def writeStageState(winners: Map[String, Long]): Unit = {
-    val rows = winners.toSeq.sortBy(_._1).map { case (t, id) => Row(t, id) }
-    val tmp = stageStatePath + "_tmp"
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), markerSchema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    swapIn(tmp, stageStatePath)
+    val body = json.createObjectNode()
+    winners.toSeq.sortBy(_._1).foreach { case (t, id) => body.put(t, id) }
+    publishFile(stageStatePath, MarkerSuffix, json.writeValueAsBytes(body))
   }
 
   /** The winner set as of the last COMPLETED stage (None when no marker
     * exists). */
-  private def readStageState(): Option[Map[String, Long]] = {
-    heal(stageStatePath)
-    if (!exists(stageStatePath)) None
-    else Some(spark.read.schema(markerSchema).parquet(stageStatePath)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-  }
+  private def readStageState(): Option[Map[String, Long]] =
+    latestFile(stageStatePath, MarkerSuffix).map { b =>
+      json.readTree(b).properties().asScala.map(e => e.getKey -> e.getValue.asLong).toMap
+    }
 
   /** Order rows within each write task by (table_name, year) before a
     * PROD write: a local sort (no shuffle) that tightens parquet
@@ -435,8 +480,8 @@ final class Store(spark: SparkSession, root: String, collection: String,
 
   /** Driver-side fingerprint of the stage commit marker: name, size and
     * modification time of each of its files, from one directory listing
-    * (no Spark job). [[stage]] and [[stageIncremental]] swap a freshly
-    * written marker in last, under new file names, so every completed
+    * (no Spark job). [[stage]] and [[stageIncremental]] publish a fresh
+    * marker last, under a new file name, so every completed
     * re-stage — by this Store or by another one on the same root —
     * changes it. None while no marker exists. */
   def stageFingerprint(): Option[String] =
@@ -444,23 +489,18 @@ final class Store(spark: SparkSession, root: String, collection: String,
       .filter(_.nonEmpty).map(_.mkString(","))
 
   /** Resolve the staged version once, for serving: the PROD relation with
-    * its file listing and merged schema, the collected metadata rows and
-    * the table descriptions. The fingerprint is taken before anything is
-    * read, so a stage that lands mid-resolution leaves the view marked
-    * stale, never a stale view marked current. */
+    * its file listing and merged schema, the metadata rows and the table
+    * descriptions (both read on the driver). The fingerprint is taken
+    * before anything is read, so a stage that lands mid-resolution leaves
+    * the view marked stale, never a stale view marked current. */
   def resolveStaged(): StagedView = {
     val fingerprint = stageFingerprint()
     val prod = readProd()
-    val meta = readMetadata()
-    val rows = meta.collect()
-      .sortBy(r => (r.getAs[String]("table_name"), r.getAs[String]("column_name")))
+    val rows = metadataRows().sortBy(r => (r.getString(0), r.getString(1)))
     // latest successful ingest of each table wins (ids grow with time)
-    val descriptions = committedLog(None)
-      .select("ingest_id", "table_name", "table_description").collect()
-      .sortBy(_.getLong(0))
-      .map(r => r.getString(1) -> Option(r.getString(2)).getOrElse(""))
-      .toMap
-    StagedView(fingerprint, prod, meta.schema, rows.toIndexedSeq, descriptions)
+    val descriptions = committedLog(None).sortBy(_.id)
+      .map(e => e.table -> Option(e.description).getOrElse("")).toMap
+    StagedView(fingerprint, prod, rows.toIndexedSeq, descriptions)
   }
 
   /** Retention vacuum: rewrite RAW keeping only each table's newest
@@ -470,19 +510,18 @@ final class Store(spark: SparkSession, root: String, collection: String,
     * than the retained window stop resolving — that is the point of a
     * retention policy. Returns the ingest ids that were purged.
     *
-    * Scale shape: the keep-set comes from the tiny log; RAW is rewritten
-    * only for table partitions that actually lose rows, published with
-    * the same per-partition backup swap as staging. */
+    * Scale shape: the keep-set comes from the driver-side log; RAW is
+    * rewritten only for table partitions that actually lose rows,
+    * published with the same per-partition backup swap as staging. The
+    * purged ingests' log files go last, each `.commit` before its
+    * `.begin`: a crash in between leaves an uncommitted ingest, which the
+    * next vacuum purges. */
   def vacuum(retainVersions: Int = 2): Seq[Long] = withWriterLease("vacuum") {
     require(retainVersions >= 1, "retainVersions must be >= 1")
-    val w = Window.partitionBy("table_name")
-      .orderBy(col("ingest_ts").desc, col("ingest_id").desc)
-    val keepIds = committedLog(None).withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= retainVersions)
-      .select("ingest_id").collect().map(_.getLong(0)).toSet
-    val allIds = readLog().filter(col("data_collection") === collection)
-      .select("ingest_id").collect().map(_.getLong(0)).toSet
-    val purge = (allIds -- keepIds).toSeq.sorted
+    val mine = logEntries().filter(_.collection == collection)
+    val keepIds = mine.filter(_.committed).groupBy(_.table).values
+      .flatMap(_.sortBy(e => (-e.tsMicros, -e.id)).take(retainVersions)).map(_.id).toSet
+    val purge = (mine.map(_.id).toSet -- keepIds).toSeq.sorted
     if (purge.isEmpty) return Nil
 
     // tables that lose rows -> rewrite only those partitions
@@ -501,12 +540,12 @@ final class Store(spark: SparkSession, root: String, collection: String,
         .write.mode("overwrite").partitionBy("table_name").parquet(staging)
       FsPaths.swapPartitions(fs, path(staging), path(rawPath), "table_name", affected)
     }
-    // prune the log rows of purged ingests (keep the log an accurate
+    // prune the log entries of purged ingests (keep the log an accurate
     // catalog of what is physically present)
-    val keptLog = readLog()
-      .filter(!(col("ingest_id").isin(purge: _*)))
-      .collect()
-    rewriteLog(keptLog)
+    purge.foreach { id =>
+      fs.delete(logFile(id, CommitSuffix), false)
+      fs.delete(logFile(id, BeginSuffix), false)
+    }
     purge
   }
 
@@ -514,53 +553,50 @@ final class Store(spark: SparkSession, root: String, collection: String,
 
   /** Per-(table, column) stats: n_non_nulls, n_unique, dtype (reference:
     * read_write.py:464-531). One aggregation pass for all columns of all
-    * tables: groupBy(table_name).agg(count, approx/exact distinct per col),
-    * then melt to long — never a per-column job.
+    * tables: the rows are melted to (table, column, value) by one
+    * generator (`inline` of an array with one struct per column), then
+    * grouped by (table, column) for count, approx/exact distinct and the
+    * optional sample and quartiles — never a per-column job or a
+    * per-column branch.
     *
     * Exact countDistinct mirrors the reference's nunique();
     * `exact = false` switches to approx_count_distinct. The staging flow
     * (stage / stageIncremental) picks the mode from `exactStatsMaxRows`
-    * via [[statsExactness]], so big collections take the approx path
-    * without the caller having to remember. */
+    * and the staged row count (exact distinct mirrors the reference below
+    * it; above it the approx sketch avoids the O(distinct-values)
+    * shuffle), so big collections take the approx path without the
+    * caller having to remember. */
   def columnStats(df: DataFrame, exact: Boolean = true,
                   sampleK: Int = 0, quantiles: Boolean = false): DataFrame = {
-    val dataCols = statColumns(df).map(_._1)
-    val numeric = df.schema.fields.filter(f =>
-      f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-      .map(_.name).toSet
-    val aggs = dataCols.flatMap { c =>
-      Seq(
-        count(col(c)).as(s"nn__$c"),
-        (if (exact) countDistinct(col(c)) else approx_count_distinct(col(c)))
-          .as(s"nu__$c")) ++
-        (if (sampleK > 0)
-          Seq(graft.functions.Sampling.bottomKSample(col(c), sampleK).as(s"sm__$c"))
-        else Nil) ++
+    val stat = statColumns(df)
+    val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    // one value slot for every column: a struct of all the stat columns
+    // with only column c set, null where c is null. Its equality is c's,
+    // and it hashes like c alone (null fields leave a hash unchanged), so
+    // its count, distinct count and HLL sketch are c's own. With one slot
+    // the exact distinct is ONE count(distinct) per (table, column), not
+    // a multi-distinct expansion of every row.
+    def slot(c: String) = when(col(c).isNotNull, struct(stat.map { case (d, _) =>
+      (if (d == c) col(d) else lit(null).cast(types(d))).as(d) }: _*))
+    val melted = df.select(col("table_name"), inline(array(stat.map { case (c, dtype) =>
+      struct(Seq(lit(c).as("column_name"), lit(dtype).as("dtype"), slot(c).as("v")) ++
+        (if (sampleK > 0) Seq(col(c).cast("string").as("s")) else Nil) ++
         // numeric quartiles ride the SAME single agg pass (Spark's
         // approx_percentile, a codegen'd mergeable agg — no extra scan)
-        (if (quantiles && numeric(c))
-          Seq(percentile_approx(col(c).cast("double"),
-            array(lit(0.25), lit(0.5), lit(0.75)), lit(10000)).as(s"pq__$c"))
-        else Nil)
-    }
-    val dtypes = df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-    val wide = df.groupBy(col("table_name")).agg(aggs.head, aggs.tail.toIndexedSeq: _*)
-    // melt driver-side over the column axis (column count is small + fixed)
-    val perCol = dataCols.map { c =>
-      wide.select(
-        Seq(
-          col("table_name"),
-          lit(c).as("column_name"),
-          col(s"nn__$c").cast("long").as("n_non_nulls"),
-          col(s"nu__$c").cast("long").as("n_unique"),
-          lit(dtypes(c)).as("dtype")) ++
-          (if (sampleK > 0) Seq(col(s"sm__$c").as("sample_values")) else Nil) ++
-          (if (quantiles)
-            Seq((if (numeric(c)) col(s"pq__$c")
-              else lit(null).cast("array<double>")).as("quartiles"))
-          else Nil): _*)
-    }
-    perCol.reduce(_.unionByName(_))
+        (if (!quantiles) Nil
+         else if (types(c).isInstanceOf[NumericType]) Seq(col(c).cast("double").as("q"))
+         else Seq(lit(null).cast("double").as("q"))): _*)
+    }: _*)))
+    val extra = (if (sampleK > 0)
+        Seq("sample_values" -> graft.functions.Sampling.bottomKSample(col("s"), sampleK)) else Nil) ++
+      (if (quantiles) Seq("quartiles" ->
+        percentile_approx(col("q"), array(lit(0.25), lit(0.5), lit(0.75)), lit(10000))) else Nil)
+    melted.groupBy(col("table_name"), col("column_name"), col("dtype"))
+      .agg(count(col("v")).as("n_non_nulls"),
+        (if (exact) countDistinct(col("v")) else approx_count_distinct(col("v"))).as("n_unique") +:
+          extra.map { case (n, e) => e.as(n) }: _*)
+      .select((Seq("table_name", "column_name", "n_non_nulls", "n_unique", "dtype") ++
+        extra.map(_._1)).map(col): _*)
   }
 
   /** (column, dtype) of every column [[columnStats]] reports on: all but
@@ -571,44 +607,49 @@ final class Store(spark: SparkSession, root: String, collection: String,
         f.name -> f.dataType.simpleString
     }
 
-  /** Exact distinct mirrors the reference below the threshold; above it
-    * the approx sketch avoids the O(distinct-values) shuffle. */
-  private def statsExactness(slice: DataFrame): Boolean =
-    slice.count() <= exactStatsMaxRows
-
   /** The one metadata path of every stage: the last stage's rows of the
-    * `keep` tables plus fresh [[columnStats]] of the rewritten slice
-    * (tables x columns, driver-sized), swapped in through a backup swap
-    * (an in-place overwrite deletes first, so a crash mid-write would lose
-    * all metadata). Stats are independent per (table, column), so a kept
+    * `keep` tables plus the `fresh` stats of the rewritten tables
+    * (tables x columns, driver-sized), published as the next metadata
+    * file ([[publishFile]]: the last stage's file stays until the new one
+    * is complete). Stats are independent per (table, column), so a kept
     * table's rows stay valid; they are aligned to the slice's columns,
     * because RAW is read with the union of its file schemas and a column
     * first ingested since is all null in the kept tables' data. */
-  private def writeMetadata(slice: Option[DataFrame], keep: Set[String]): Unit = {
+  private def writeMetadata(fresh: Option[FreshStats], keep: Set[String]): Unit = {
     val kept =
       if (keep.isEmpty) Map.empty[(String, String), Row]
-      else readMetadata().where(col("table_name").isin(keep.toSeq: _*)).collect()
-        .map(r => (r.getAs[String]("table_name"), r.getAs[String]("column_name")) -> r).toMap
-    val rows = slice.fold(kept.values.toSeq) { df =>
-      val aligned = for (t <- keep.toSeq; (c, dtype) <- statColumns(df))
+      else metadataRows().filter(r => keep(r.getString(0)))
+        .map(r => (r.getString(0), r.getString(1)) -> r).toMap
+    val rows = fresh.fold(kept.values.toSeq) { f =>
+      val aligned = for (t <- keep.toSeq; (c, dtype) <- f.columns)
         yield kept.getOrElse((t, c), Row(t, c, 0L, 0L, dtype))
-      aligned ++ columnStats(df, exact = statsExactness(df)).collect()
+      aligned ++ f.rows
     }
-    val tmp = metadataPath + "_tmp"
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), metadataSchema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    swapIn(tmp, metadataPath)
+    val body = json.createArrayNode()
+    rows.foreach(r => body.addObject()
+      .put("table_name", r.getString(0)).put("column_name", r.getString(1))
+      .put("n_non_nulls", r.getLong(2)).put("n_unique", r.getLong(3))
+      .put("dtype", r.getString(4)))
+    publishFile(metadataPath, MetaSuffix, json.writeValueAsBytes(body))
   }
 
-  def readMetadata(): DataFrame = {
+  /** The metadata rows of the last stage (none before the first), with
+    * their schema. */
+  private def metadataRows(): Seq[Row] = {
     heal(metadataPath)
-    spark.read.parquet(metadataPath)
+    latestFile(metadataPath, MetaSuffix).toSeq.flatMap(b => json.readTree(b).asScala.map { o =>
+      new GenericRowWithSchema(Array(o.get("table_name").asText, o.get("column_name").asText,
+        o.get("n_non_nulls").asLong, o.get("n_unique").asLong, o.get("dtype").asText), metadataSchema)
+    })
   }
 
-  /** Queryable columns of one table, read fresh from the metadata zone
+  /** The metadata rows as a driver-local frame with their fixed schema. */
+  def readMetadata(): DataFrame = frame(metadataRows(), metadataSchema)
+
+  /** Queryable columns of one table, read fresh from the metadata file
     * (see [[Store.queryableByTable]]). */
   def queryableColumns(tableName: String): Set[String] =
-    queryableByTable(readMetadata().where(col("table_name") === tableName).collect())
+    queryableByTable(metadataRows().filter(_.getString(0) == tableName))
       .getOrElse(tableName, Set("table_name"))
 }
 
@@ -619,7 +660,6 @@ object Store {
     * table's description. `fingerprint` is the stage marker's
     * [[Store.stageFingerprint]] as of the resolution. */
   final case class StagedView(fingerprint: Option[String], prod: DataFrame,
-                              metadataSchema: StructType,
                               metadataRows: IndexedSeq[Row],
                               descriptions: Map[String, String]) {
     /** Queryable columns per staged table. */
@@ -658,16 +698,61 @@ object Store {
     StructField("n_unique", LongType),
     StructField("dtype", StringType)))
 
-  /** Schema of the stage commit marker: each staged table's winning
-    * ingest. */
-  private val markerSchema: StructType = StructType(Seq(
-    StructField("table_name", StringType, nullable = false),
-    StructField("ingest_id", LongType, nullable = false)))
-
   /** Schema of the winner ids a stage joins RAW with. */
   private val winnerSchema: StructType = StructType(Seq(
     StructField("ingest_id", LongType, nullable = false),
     StructField("ingest_ts", TimestampType, nullable = false)))
+
+  /** Committed ingest ids, for the append view's semi join. */
+  private val idSchema: StructType = StructType(Seq(
+    StructField("ingest_id", LongType, nullable = false)))
+
+  /** File names: `<id>.begin` and `<id>.commit` in the log, `<n>.marker`
+    * and `<n>.meta` for the marker and the metadata. */
+  private val BeginSuffix = ".begin"
+  private val CommitSuffix = ".commit"
+  private val MarkerSuffix = ".marker"
+  private val MetaSuffix = ".meta"
+
+  /** `n` of a `<n><suffix>` file name. */
+  private def numbered(name: String, suffix: String): Option[Long] =
+    if (name.endsWith(suffix)) name.stripSuffix(suffix).toLongOption else None
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def micros(ts: Timestamp): Long = DateTimeUtils.fromJavaTimestamp(ts)
+
+  /** The fresh metadata of a stage's rewritten tables: the columns every
+    * table reports on (with their dtypes) and the stats rows. */
+  private final case class FreshStats(columns: Seq[(String, String)], rows: Seq[Row])
+
+  /** One ingest of the log. `<id>.begin` holds everything but the id and
+    * `committed` as JSON (the timestamp in microseconds, as Spark keeps
+    * it); `committed` is whether `<id>.commit` exists. */
+  private final case class LogEntry(id: Long, tsMicros: Long, collection: String,
+                                    table: String, url: String, description: String,
+                                    committed: Boolean) {
+    def ts: Timestamp = DateTimeUtils.toJavaTimestamp(tsMicros)
+    def row: Row = Row(id, ts, collection, table, url, description, if (committed) 1 else 0)
+    def encode: Array[Byte] = {
+      val o = json.createObjectNode()
+      o.put("ingest_ts_us", tsMicros)
+      o.put("data_collection", collection)
+      o.put("table_name", table)
+      o.put("url", url)
+      o.put("table_description", description)
+      json.writeValueAsBytes(o)
+    }
+  }
+
+  private object LogEntry {
+    def decode(id: Long, body: Array[Byte], committed: Boolean): LogEntry = {
+      val o = json.readTree(body)
+      def text(k: String): String = Option(o.get(k)).filterNot(_.isNull).map(_.asText).orNull
+      LogEntry(id, o.get("ingest_ts_us").asLong, text("data_collection"), text("table_name"),
+        text("url"), text("table_description"), committed)
+    }
+  }
 
   /** Provenance log schema (reference: utils.py:191-203). */
   val logSchema: StructType = StructType(Seq(

@@ -87,6 +87,16 @@ class CompactionSpec extends AnyFunSuite {
       s"files span too much of the 10000 range: sx=$medianSx sy=$medianSy")
   }
 
+  test("planFiles: at most one output file per ScanPrune.PageRowLimit input rows") {
+    val dir = freshDir()
+    (1 to 5000).map(i => (i, i)).toDF("a", "b").repartition(5).write.parquet(dir)
+    // by bytes alone targetBytes = 1 plans one file per input byte
+    assert(Compaction.planFiles(spark, dir, 1L) == 3)
+    val stats = Compaction.compact(spark, dir, targetBytes = 1L)
+    assert(stats.filesAfter == 3L)
+    assert(spark.read.parquet(dir).count() == 5000L)
+  }
+
   test("planFiles: ceil(bytes/target), floor of one file") {
     val dir = freshDir()
     (1 to 100).map(i => (i, i)).toDF("a", "b").coalesce(1).write.parquet(dir)
