@@ -46,17 +46,18 @@ object Compaction {
 
   /** Number of output files a compaction of `dir` to `targetBytes` would
     * produce — the planning half, callable without touching data:
-    * ceil(input bytes / targetBytes), at least one, and at most one file
+    * ceil(input bytes / targetBytes), at least one. A plan finer than the
+    * input's file count splits files, and is bounded further by one file
     * per [[ScanPrune.PageRowLimit]] input rows (counted from the parquet
-    * footers, on the driver). A file below one page of rows gives page
-    * skipping nothing to prune, and a plan finer than that only adds
-    * tasks: a tiny `targetBytes` would otherwise plan one shuffle
-    * partition per input byte. */
+    * footers, on the driver): a file below one page of rows gives page
+    * skipping nothing to prune, and a tiny `targetBytes` would otherwise
+    * plan one shuffle partition per input byte. A plan that only merges
+    * files needs no footer read. */
   def planFiles(spark: SparkSession, dir: String, targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val files = dataFiles(spark, dir)
     val byBytes = math.max(1L, math.ceil(files.map(_._2).sum.toDouble / targetBytes).toLong)
-    if (byBytes == 1L) 1
+    if (byBytes <= math.max(1, files.size)) byBytes.toInt
     else {
       val p = new Path(dir)
       val rows = FsPaths.parquetRows(p.getFileSystem(spark.sparkContext.hadoopConfiguration),

@@ -34,13 +34,16 @@ import graft.ops.FsPaths
   *                                     `<n>.marker` file, each staged
   *                                     table's winning ingest id as JSON
   *
+  * A `<n>.meta` or `<n>.marker` file is written whole under `_<n>...`
+  * and renamed in ([[publishFile]]).
+  *
   * Mirrors the reference's SQLite zones (read_write.py:267-404) but scales:
   * RAW appends are partitioned parquet writes, the snapshot is a broadcast
   * join of RAW with the winners the driver picks from the log, and
   * table_name partitioning gives the query layer pruned directory scans
   * instead of full-table WHERE filters. The log, the metadata and the
-  * marker are small driver-side files, read from one directory listing
-  * and written with exclusive creates: no Spark job keeps the books.
+  * marker are small driver-side files, read from one directory listing:
+  * no Spark job keeps the books.
   */
 /** @param exactStatsMaxRows row-count threshold for the metadata pass:
   *   tables at or under it get exact `countDistinct` (mirrors the
@@ -170,13 +173,14 @@ final class Store(spark: SparkSession, root: String, collection: String,
     (names.flatMap(numbered(_, BeginSuffix)).sorted, names.flatMap(numbered(_, CommitSuffix)).toSet)
   }
 
-  /** Every log entry, from one listing and the `.begin` bodies. A begin
-    * file still being written belongs to an ingest in flight, which is
-    * uncommitted: while its body is unreadable it is left out. */
+  /** Every log entry, from one listing and the `.begin` bodies: one file
+    * open per ingest that [[vacuum]] has not purged. A begin file still
+    * being written belongs to an ingest in flight, which is uncommitted:
+    * while its body is unreadable it is left out. */
   private def logEntries(): Seq[LogEntry] = {
     val (begun, committed) = listLog()
     begun.flatMap { id =>
-      try Some(LogEntry.decode(id, readFile(logFile(id, BeginSuffix)), committed(id)))
+      try Some(LogEntry(fromJson(readFile(logFile(id, BeginSuffix)), logSchema).head, committed(id)))
       catch { case _: Exception if !committed(id) => None }
     }
   }
@@ -186,20 +190,27 @@ final class Store(spark: SparkSession, root: String, collection: String,
     try in.readAllBytes() finally in.close()
   }
 
-  /** Create `p` holding `body`; refuses an existing file. */
-  private def createFile(p: Path, body: Array[Byte]): Unit = {
-    val out = fs.create(p, false)
+  /** Create `p` holding `body`; refuses an existing file unless
+    * `overwrite`. */
+  private def createFile(p: Path, body: Array[Byte], overwrite: Boolean = false): Unit = {
+    val out = fs.create(p, overwrite)
     try out.write(body) finally out.close()
   }
 
-  /** Publish `body` as the next `<n><suffix>` file of `dir`: its exclusive
-    * create is the commit, then every earlier entry goes. Readers take
-    * the highest `n` ([[latestFile]]), so a crash between the two steps
-    * is harmless, and every publish adds a new file name. */
+  /** Publish `body` as the next `<n><suffix>` file of `dir`: written whole
+    * under `_<n><suffix>`, a name readers never take, then renamed in, so
+    * a numbered file is complete from the moment it exists. Every earlier
+    * entry (a crashed publish's leftover too) goes last. Readers take the
+    * highest `n` ([[latestFile]]), so a crash between any two steps
+    * leaves the last complete file to read. Callers hold the writer
+    * lease. */
   private def publishFile(dir: String, suffix: String, body: Array[Byte]): Unit = {
     val old = listNames(dir)
     val next = old.flatMap(numbered(_, suffix)).maxOption.fold(1L)(_ + 1L)
-    createFile(new Path(dir, s"$next$suffix"), body)
+    val tmp = new Path(dir, s"_$next$suffix")
+    createFile(tmp, body, overwrite = true)
+    if (!fs.rename(tmp, new Path(dir, s"$next$suffix")))
+      throw new java.io.IOException(s"could not publish $next$suffix in $dir")
     old.foreach(n => fs.delete(new Path(dir, n), true))
   }
 
@@ -250,7 +261,7 @@ final class Store(spark: SparkSession, root: String, collection: String,
   private[store] def appendLogRow(id: Long, ts: Timestamp, tableName: String,
                            url: String, description: String, success: Int): Unit = {
     createFile(logFile(id, BeginSuffix),
-      LogEntry(id, micros(ts), collection, tableName, url, description, committed = false).encode)
+      toJson(Seq(Row(id, ts, collection, tableName, url, description, 0)), logSchema))
     if (success == 1) createFile(logFile(id, CommitSuffix), Array.emptyByteArray)
   }
 
@@ -414,7 +425,7 @@ final class Store(spark: SparkSession, root: String, collection: String,
         .write.mode("overwrite").partitionBy("table_name").parquet(staging)
       val rows = FsPaths.parquetRows(fs, FsPaths.committedPartPaths(fs, path(staging)).map(path))
       val stats = columnStats(spark.read.schema(slice.schema).parquet(staging),
-        exact = rows <= exactStatsMaxRows).collect()
+        exact = rows <= exactStatsMaxRows).collect().toSeq
       FreshStats(statColumns(slice), stats)
     }
     // a removed table has no staged partition: its swap only deletes
@@ -427,18 +438,15 @@ final class Store(spark: SparkSession, root: String, collection: String,
   /** Publish the marker of a completed stage ([[publishFile]]). Every
     * stage adds a new file name, which is what [[stageFingerprint]]
     * sees. */
-  private def writeStageState(winners: Map[String, Long]): Unit = {
-    val body = json.createObjectNode()
-    winners.toSeq.sortBy(_._1).foreach { case (t, id) => body.put(t, id) }
-    publishFile(stageStatePath, MarkerSuffix, json.writeValueAsBytes(body))
-  }
+  private def writeStageState(winners: Map[String, Long]): Unit =
+    publishFile(stageStatePath, MarkerSuffix,
+      toJson(winners.toSeq.sorted.map { case (t, id) => Row(t, id) }, markerSchema))
 
   /** The winner set as of the last COMPLETED stage (None when no marker
     * exists). */
   private def readStageState(): Option[Map[String, Long]] =
-    latestFile(stageStatePath, MarkerSuffix).map { b =>
-      json.readTree(b).properties().asScala.map(e => e.getKey -> e.getValue.asLong).toMap
-    }
+    latestFile(stageStatePath, MarkerSuffix).map(b =>
+      fromJson(b, markerSchema).map(r => r.getString(0) -> r.getLong(1)).toMap)
 
   /** Order rows within each write task by (table_name, year) before a
     * PROD write: a local sort (no shuffle) that tightens parquet
@@ -625,22 +633,14 @@ final class Store(spark: SparkSession, root: String, collection: String,
         yield kept.getOrElse((t, c), Row(t, c, 0L, 0L, dtype))
       aligned ++ f.rows
     }
-    val body = json.createArrayNode()
-    rows.foreach(r => body.addObject()
-      .put("table_name", r.getString(0)).put("column_name", r.getString(1))
-      .put("n_non_nulls", r.getLong(2)).put("n_unique", r.getLong(3))
-      .put("dtype", r.getString(4)))
-    publishFile(metadataPath, MetaSuffix, json.writeValueAsBytes(body))
+    publishFile(metadataPath, MetaSuffix, toJson(rows, metadataSchema))
   }
 
   /** The metadata rows of the last stage (none before the first), with
     * their schema. */
   private def metadataRows(): Seq[Row] = {
     heal(metadataPath)
-    latestFile(metadataPath, MetaSuffix).toSeq.flatMap(b => json.readTree(b).asScala.map { o =>
-      new GenericRowWithSchema(Array(o.get("table_name").asText, o.get("column_name").asText,
-        o.get("n_non_nulls").asLong, o.get("n_unique").asLong, o.get("dtype").asText), metadataSchema)
-    })
+    latestFile(metadataPath, MetaSuffix).toSeq.flatMap(fromJson(_, metadataSchema))
   }
 
   /** The metadata rows as a driver-local frame with their fixed schema. */
@@ -703,6 +703,10 @@ object Store {
     StructField("ingest_id", LongType, nullable = false),
     StructField("ingest_ts", TimestampType, nullable = false)))
 
+  /** A stage marker row: a staged table and its winning ingest. */
+  private val markerSchema: StructType = StructType(Seq(
+    StructField("table_name", StringType), StructField("ingest_id", LongType)))
+
   /** Committed ingest ids, for the append view's semi join. */
   private val idSchema: StructType = StructType(Seq(
     StructField("ingest_id", LongType, nullable = false)))
@@ -726,33 +730,50 @@ object Store {
     * table reports on (with their dtypes) and the stats rows. */
   private final case class FreshStats(columns: Seq[(String, String)], rows: Seq[Row])
 
-  /** One ingest of the log. `<id>.begin` holds everything but the id and
-    * `committed` as JSON (the timestamp in microseconds, as Spark keeps
-    * it); `committed` is whether `<id>.commit` exists. */
-  private final case class LogEntry(id: Long, tsMicros: Long, collection: String,
-                                    table: String, url: String, description: String,
-                                    committed: Boolean) {
-    def ts: Timestamp = DateTimeUtils.toJavaTimestamp(tsMicros)
-    def row: Row = Row(id, ts, collection, table, url, description, if (committed) 1 else 0)
-    def encode: Array[Byte] = {
-      val o = json.createObjectNode()
-      o.put("ingest_ts_us", tsMicros)
-      o.put("data_collection", collection)
-      o.put("table_name", table)
-      o.put("url", url)
-      o.put("table_description", description)
-      json.writeValueAsBytes(o)
-    }
+  /** One ingest of the log: the row of [[logSchema]] its `<id>.begin`
+    * file holds (success 0) and whether `<id>.commit` exists. */
+  private final case class LogEntry(begin: Row, committed: Boolean) {
+    def id: Long = begin.getLong(0)
+    def ts: Timestamp = begin.getTimestamp(1)
+    def tsMicros: Long = micros(ts)
+    def collection: String = begin.getString(2)
+    def table: String = begin.getString(3)
+    def description: String = begin.getString(5)
+    def row: Row = Row.fromSeq(begin.toSeq.init :+ (if (committed) 1 else 0))
   }
 
-  private object LogEntry {
-    def decode(id: Long, body: Array[Byte], committed: Boolean): LogEntry = {
-      val o = json.readTree(body)
-      def text(k: String): String = Option(o.get(k)).filterNot(_.isNull).map(_.asText).orNull
-      LogEntry(id, o.get("ingest_ts_us").asLong, text("data_collection"), text("table_name"),
-        text("url"), text("table_description"), committed)
+  /** The one file format of the log, the metadata and the marker: rows of
+    * a flat `schema` as a JSON array of objects, a timestamp as its
+    * microseconds (as Spark keeps it). */
+  private def toJson(rows: Seq[Row], schema: StructType): Array[Byte] = {
+    val body = json.createArrayNode()
+    rows.foreach { r =>
+      val o = body.addObject()
+      schema.fields.indices.foreach { i =>
+        val k = schema.fields(i).name
+        if (r.isNullAt(i)) o.putNull(k) else schema.fields(i).dataType match {
+          case LongType      => o.put(k, r.getLong(i))
+          case IntegerType   => o.put(k, r.getInt(i))
+          case TimestampType => o.put(k, micros(r.getTimestamp(i)))
+          case _             => o.put(k, r.getString(i))
+        }
+      }
     }
+    json.writeValueAsBytes(body)
   }
+
+  private def fromJson(body: Array[Byte], schema: StructType): Seq[Row] =
+    json.readTree(body).asScala.toSeq.map { o =>
+      new GenericRowWithSchema(schema.fields.map { f =>
+        val v = o.get(f.name)
+        if (v == null || v.isNull) null else f.dataType match {
+          case LongType      => v.asLong
+          case IntegerType   => v.asInt
+          case TimestampType => DateTimeUtils.toJavaTimestamp(v.asLong)
+          case _             => v.asText
+        }
+      }, schema)
+    }
 
   /** Provenance log schema (reference: utils.py:191-203). */
   val logSchema: StructType = StructType(Seq(

@@ -97,6 +97,16 @@ class CompactionSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == 5000L)
   }
 
+  test("planFiles: a plan that only merges files is ceil(bytes/target), no row bound") {
+    val dir = freshDir()
+    (1 to 5000).map(i => (i, i)).toDF("a", "b").repartition(5).write.parquet(dir)
+    val bytes = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    // five files into five: by rows the plan would be 3, but a plan no
+    // finer than the input's files reads no footer
+    assert(Compaction.planFiles(spark, dir, (bytes + 4) / 5) == 5)
+    assert(Compaction.planFiles(spark, dir, bytes) == 1)
+  }
+
   test("planFiles: ceil(bytes/target), floor of one file") {
     val dir = freshDir()
     (1 to 100).map(i => (i, i)).toDF("a", "b").coalesce(1).write.parquet(dir)

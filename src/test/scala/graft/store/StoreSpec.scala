@@ -288,6 +288,30 @@ class StoreSpec extends AnyFunSuite {
     assert(restarted.nextIngestId() == 2L)
   }
 
+  test("a stage that dies writing its metadata leaves the last metadata and marker to read") {
+    val st = freshStore()
+    st.ingest(frame(1), "a", ingestTs = Timestamp.valueOf("2026-01-01 00:00:00"))
+    st.ingest(frame(1), "b", ingestTs = Timestamp.valueOf("2026-01-01 00:00:00"))
+    st.stage()
+    def rows(t: String) = st.readMetadata().where(col("table_name") === t)
+      .collect().map(_.toString).sorted.toSeq
+    val (a, b) = (rows("a"), rows("b"))
+    assert(a.nonEmpty && b.nonEmpty)
+    st.ingest(frame(2), "b", ingestTs = Timestamp.valueOf("2026-01-02 00:00:00"))
+    // the process dies while it writes the new metadata file's body
+    CrashFs.installed(spark) {
+      CrashFs.crashOn = _.endsWith(".meta")
+      intercept[java.io.IOException](st.stageIncremental())
+    }
+    assert(rows("a") == a && rows("b") == b)
+    assert(st.queryableColumns("a").contains("label"))
+    // the marker is still the last stage's: b is re-done, a's stats kept
+    assert(st.stageIncremental() == Seq("b"))
+    assert(rows("a") == a && rows("b") == b)
+    assert(st.readProd().where(col("table_name") === "b").select("version").as[Int]
+      .collect().toSet == Set(2))
+  }
+
   test("prod swap crash window: backup restored on next read") {
     val st = freshStore()
     st.ingest(frame(1), "tbl", ingestTs = Timestamp.valueOf("2026-01-01 00:00:00"))
@@ -579,5 +603,35 @@ class StoreSpec extends AnyFunSuite {
     graft.ops.Lease.release(spark, root)
     assert(!java.nio.file.Files.exists(lease))
     assert(st.readProd().where(col("version") === 3).count() == 2L)
+  }
+}
+
+/** The local file system, except that writing to a file whose name
+  * `CrashFs.crashOn` accepts fails once the file is created: a process
+  * that dies while it writes the body. */
+class CrashFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def create(f: org.apache.hadoop.fs.Path, permission: org.apache.hadoop.fs.permission.FsPermission,
+                      overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    val out = super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+    if (!CrashFs.crashOn(f.getName)) out
+    else new org.apache.hadoop.fs.FSDataOutputStream(new java.io.FilterOutputStream(out) {
+      override def write(b: Int): Unit = throw new java.io.IOException(s"crash writing $f")
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = write(0)
+    }, null)
+  }
+}
+
+object CrashFs {
+  @volatile var crashOn: String => Boolean = _ => false
+
+  /** Run `body` with the session's `file:` scheme served by a fresh
+    * [[CrashFs]] on every lookup. */
+  def installed[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[CrashFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try body
+    finally { crashOn = _ => false; conf.unset("fs.file.impl"); conf.unset("fs.file.impl.disable.cache") }
   }
 }
