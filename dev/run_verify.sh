@@ -16,7 +16,6 @@ cd /root/repo
 sbt -batch package 2>&1 | grep -E 'error|warn.*deprecat|success' | head -20
 rm -rf "$OUT"
 java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/queensspark_2.13-0.1.0.jar:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT" 2>&1 | grep -v '^2[0-9/]*' | tail -5
 python3 dev/compare.py "$SF" "$OUT"

@@ -28,8 +28,9 @@ object Bench {
     * `bench-<name>`, waiting at most `timeoutMs`. A query still running
     * then is cancelled and its thread joined (up to 30 s), so it cannot
     * overlap the next query. Returns the elapsed seconds, taken before
-    * that join, and whether `work` completed: a query that throws (or
-    * times out) must NOT masquerade as a fast success. */
+    * that join (at least `timeoutMs` for a timed-out query), and whether
+    * `work` completed: a query that throws (or times out) must NOT
+    * masquerade as a fast success. */
   private[graft] def runTimed(spark: SparkSession, name: String, timeoutMs: Long)(
       work: => Unit): (Double, Boolean) = {
     val t0 = System.nanoTime()
@@ -52,20 +53,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // comma-separated query-name filter for local iteration; empty = all
     val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm up executors/codegen so the first timed query isn't charged
     // for session initialization

@@ -93,14 +93,10 @@ object Cli {
     // when embedded (tests, notebooks) getOrCreate returns the caller's
     // session — which the CLI must then NOT stop on exit
     val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
+    val spark = GraftSession.builder(
+        sys.env.getOrElse("GRAFT_MASTER", "local[*]"),
+        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32").toInt)
       .appName(s"graft-$collection")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val facade = new Facade(spark, root, collection)

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.Config
 import graft.etl.Config.TableConfig
 import graft.io.WorkbookReader.Workbook
@@ -15,13 +13,7 @@ import graft.serve.Facade
   * -> filter-DSL query -> export -> info. Run with no args. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
+import graft.dsl.Json
+
 /** Persisted CLI configuration (reference: settings.py's config.ini +
   * the `config` verb, cli.py:41-64): a JSON file in the user directory
   * holding the store root and export-directory defaults, so repeated CLI
@@ -18,7 +20,7 @@ object Settings {
   /** Current settings; absent file -> empty map. */
   def load(): Map[String, String] =
     if (!Files.exists(configPath)) Map.empty
-    else graft.dsl.Json.parse(
+    else Json.parse(
         new String(Files.readAllBytes(configPath), UTF_8)) match {
       case m: Map[_, _] => m.collect { case (k: String, v: String) => k -> v }
       case _ => Map.empty
@@ -30,7 +32,7 @@ object Settings {
       root.map("root" -> _).toMap ++ exportDir.map("export_dir" -> _).toMap
     Files.createDirectories(configPath.getParent)
     val body = merged.toSeq.sorted
-      .map { case (k, v) => s""""${escape(k)}": "${escape(v)}"""" }
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }
       .mkString("{", ", ", "}")
     Files.write(configPath, body.getBytes(UTF_8)): Unit
   }
@@ -44,7 +46,4 @@ object Settings {
     s"""User dir:    $userDir
        |Store root:  $defaultRoot
        |Export dir:  $defaultExportDir""".stripMargin
-
-  private def escape(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
 }

@@ -63,10 +63,6 @@ object SparkEntry {
          av4 AS (SELECT doc_id, (((a3) % 4294967296) * (1609587929392839161) + ((((a3) // 4294967296) * (1609587929392839161)) % 4294967296) * 4294967296) % 18446744073709551616 AS a4 FROM av3),
          fin AS (SELECT doc_id, xor(a4, a4 // 4294967296) AS h FROM av4)"""
 
-  /** Shared DuckDB prefix for the q_x_html_* oracles: synthesizes the
-    * SAME page as [[synthHtml]] and mirrors [[graft.text.Html.stripTags]]
-    * rule for rule (same RE2-safe patterns, same order), ending at the
-    * `ex(doc_id, html, txt)` CTE the per-query SELECTs build on. */
   /** Shared DuckDB prefix for the q_x_kcenter* oracles: unrolls the
     * k-center greedy recurrence (seed = min vec_id; each step argmax of
     * the running least squared-L2 distance, ties to the smaller id) to
@@ -94,6 +90,10 @@ object SparkEntry {
     sb.toString
   }
 
+  /** Shared DuckDB prefix for the q_x_html_* oracles: synthesizes the
+    * SAME page as [[synthHtml]] and mirrors [[graft.text.Html.stripTags]]
+    * rule for rule (same RE2-safe patterns, same order), ending at the
+    * `ex(doc_id, html, txt)` CTE the per-query SELECTs build on. */
   private val htmlOracleCommon: String = raw"""WITH h AS (SELECT doc_id,
          '<html><head><title>Doc ' || doc_id || '</title><script type="text/javascript">var x = 1 < 2;</script><style>.nav{color:red}</style></head><body><h1>'
          || substr(text, 1, 30) || '</h1><p>' || text ||
@@ -199,10 +199,6 @@ object SparkEntry {
   // the driver's compare sorts columns by name and hashes values.
   // ------------------------------------------------------------------
 
-  /** Build a map from pairs, throwing on duplicate keys — a plain Map
-    * literal silently keeps the LAST duplicate, which once shipped an
-    * old query under a new oracle (both named q_x_contamination_report)
-    * and dropped the other entirely. */
   /** One-time [[graft.text.DedupIndex]] build per sf dir for
     * q_x_dedup_incremental_idx: the index is PERSISTENT state in
     * production — built once, probed every batch — so repeated query
@@ -645,6 +641,10 @@ object SparkEntry {
     "c_mktsegment" -> col("c_mktsegment"),
     "acct_bucket" -> graft.ops.Privacy.generalizeNum(col("c_acctbal"), width))
 
+  /** Build a map from pairs, throwing on duplicate keys — a plain Map
+    * literal silently keeps the LAST duplicate, which once shipped an
+    * old query under a new oracle (both named q_x_contamination_report)
+    * and dropped the other entirely. */
   private def uniqueMap[V](pairs: (String, V)*): Map[String, V] = {
     val dups = pairs.groupBy(_._1).filter(_._2.length > 1).keys
     require(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")

@@ -1,26 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.dsl.Json
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-query timeout: a single wedged query must not stall the whole
-    // correctness run. The query runs under a job group on a worker
-    // thread; on timeout the group's Spark jobs are cancelled and we
-    // move on.
+    // correctness run. Each query runs under `Bench.runTimed`; on
+    // timeout its jobs are cancelled and we move on.
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "300").toLong
     // Dev iteration aid: SPARK_GRAFT_VERIFY_ONLY=q_a,q_b restricts the dump
     // (oracle_sql.json is filtered to match so compare.py checks the same set).
@@ -31,39 +24,19 @@ object Verify {
       case None        => SparkEntry.queries
     }
     selected.foreach { case (name, fn) =>
-      val t = new Thread(() =>
-        try {
-          spark.sparkContext.setJobGroup(s"verify-$name", name,
-            interruptOnCancel = true)
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-        } catch { case e: Throwable =>
+      val (elapsed, ok) = Bench.runTimed(spark, name, timeoutSec * 1000) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        })
-      t.setDaemon(true)
-      t.start()
-      t.join(timeoutSec * 1000)
-      if (t.isAlive) {
-        System.err.println(s"[verify] $name timed out after ${timeoutSec}s — cancelling")
-        spark.sparkContext.cancelJobGroup(s"verify-$name")
-        t.join(30000)
+          throw e
+        }
       }
+      if (!ok && elapsed >= timeoutSec)
+        System.err.println(s"[verify] $name timed out after ${timeoutSec}s — cancelled")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

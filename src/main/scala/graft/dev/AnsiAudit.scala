@@ -1,13 +1,12 @@
 package graft.dev
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
+
 object AnsiAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder.master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(8)
+    spark.conf.set("spark.sql.ansi.enabled", "true")
     spark.sparkContext.setLogLevel("ERROR")
     var bad = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

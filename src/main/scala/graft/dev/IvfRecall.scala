@@ -1,8 +1,8 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.vec.VectorOps
 
 /** Dev tool: measure IVF recall@k against the brute-force exact top-k on
@@ -15,10 +15,7 @@ object IvfRecall {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(5)
     val nQ = args.lift(2).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,8 +1,8 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.vec.{Reduce, VectorOps}
 
 /** Dev tool: measure neighbor recall after random projection — does
@@ -17,10 +17,7 @@ object RpRecall {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     val nQueries = args.lift(2).map(_.toLong).getOrElse(100L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

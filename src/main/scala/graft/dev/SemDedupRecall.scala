@@ -1,8 +1,8 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.vec.VectorOps
 
 /** Dev tool: measure what fraction of the TRUE near-duplicate pairs
@@ -16,10 +16,7 @@ object SemDedupRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val threshold = args.lift(1).map(_.toDouble).getOrElse(0.3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,13 +1,16 @@
 package graft.dev
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Dev tool: synthesize an N-fold corpus under /tmp from an sf dir, for
-  * probing scaling behavior beyond the driver's sf0.1 (ScaleProbe reads
-  * the result). Replication is shaped like a real web corpus: most copies
-  * are byte-identical (exact-dup mass the pipeline must collapse), a
-  * minority get a distinct suffix token (near-dups for MinHash). Events
+  * probing scaling behavior beyond the driver's sf0.1 (`graft.Bench`
+  * reads the result with SPARK_GRAFT_SF_DIR pointed at it). Replication
+  * is shaped like a real web corpus: most copies are byte-identical
+  * (exact-dup mass the pipeline must collapse), a minority get a
+  * distinct suffix token (near-dups for MinHash). Events
   * and embeddings replicate with shifted ids (fresh users/vectors).
   * Usage: graft.dev.Synth10x [srcDir] [outDir] [factor] */
 object Synth10x {
@@ -15,10 +18,7 @@ object Synth10x {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_scale10x")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     def replicate(df: DataFrame, idCols: Seq[String], f: Long => DataFrame => DataFrame = _ => identity): DataFrame =

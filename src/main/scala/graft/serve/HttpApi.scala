@@ -8,7 +8,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Row
 
-import graft.dsl.FilterDsl
+import graft.dsl.{FilterDsl, Json}
 
 /** REST serving layer — the reference's `GET /data/{collection}` endpoint
   * (app.py:42-185) over the JDK's built-in HTTP server (zero-dependency,
@@ -101,7 +101,7 @@ final class HttpApi(facade: Facade, collection: String) {
       val cols = params.get("cols").map(_.split(",").map(_.trim).toSeq)
 
       // malformed JSON -> 400 (app.py:92-97); semantic errors -> 422
-      try graft.dsl.Json.parse(filters)
+      try Json.parse(filters)
       catch { case e: Exception => respond(ex, 400, err(s"malformed filters JSON: ${e.getMessage}")); return }
 
       val page =
@@ -119,9 +119,9 @@ final class HttpApi(facade: Facade, collection: String) {
         .map(rowToJson(page.data.schema.fieldNames.toIndexedSeq, _))
       val cursorJson = page.nextCursor.map(_.toString).getOrElse("null")
       // the reference plucks it from the first data row (app.py:171)
-      val desc = jstr(facade.queryService.view.descriptions.getOrElse(table, ""))
+      val desc = Json.quote(facade.queryService.view.descriptions.getOrElse(table, ""))
       respond(ex, 200,
-        s"""{"table_name": ${jstr(table)}, "table_description": $desc, "next_cursor": $cursorJson, "data": [${records.mkString(",")}]}""")
+        s"""{"table_name": ${Json.quote(table)}, "table_description": $desc, "next_cursor": $cursorJson, "data": [${records.mkString(",")}]}""")
     } catch {
       case e: Throwable => respond(ex, 500, err(s"internal error: ${e.getMessage}"))
     }
@@ -135,28 +135,20 @@ final class HttpApi(facade: Facade, collection: String) {
       k -> java.net.URLDecoder.decode(v, UTF_8)
     }.toMap
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private def rowToJson(names: Seq[String], r: Row): String =
     names.zipWithIndex.map { case (n, i) =>
       val v =
         if (r.isNullAt(i)) "null"
         else r.get(i) match {
-          case s: String => jstr(s)
-          case t: java.sql.Timestamp => jstr(t.toString)
-          case d: java.sql.Date => jstr(d.toString)
+          case s: String => Json.quote(s)
+          case t: java.sql.Timestamp => Json.quote(t.toString)
+          case d: java.sql.Date => Json.quote(d.toString)
           case other => other.toString
         }
-      s"${jstr(n)}: $v"
+      s"${Json.quote(n)}: $v"
     }.mkString("{", ",", "}")
 
-  private def err(msg: String): String = s"""{"error": ${jstr(msg)}}"""
+  private def err(msg: String): String = s"""{"error": ${Json.quote(msg)}}"""
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(UTF_8)

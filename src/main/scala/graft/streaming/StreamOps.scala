@@ -873,8 +873,8 @@ object StreamOps {
     // round-robin every output file spans the full key range, so a
     // point-set probe touches ~every page of ~every file and the
     // pushdown prunes nothing; disjoint per-file ranges are what make
-    // a k-key probe touch O(k) pages total (CorpusPushdownProbe
-    // measures this exact layout)
+    // a k-key probe touch O(k) pages total (COVERAGE.md, "Round-12
+    // corpus compaction", measures this exact layout)
     sortCol.map(c => live0.repartitionByRange(targetFiles, col(c))
         .sortWithinPartitions(col(c)))
       .getOrElse(live0.repartition(targetFiles))

@@ -315,6 +315,27 @@ class PlanShapeSpec extends AnyFunSuite {
       mPlan.take(1500))
   }
 
+  /** Matches of `pattern` per `src/main/scala/graft` file (path relative
+    * to that root), ignoring mentions inside comments and scaladoc (lines
+    * led by `*` or `//`). */
+  private def codeSites(pattern: String): Map[String, Int] = {
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val re = pattern.r
+    val found = scala.collection.mutable.Map.empty[String, Int]
+    java.nio.file.Files.walk(root).forEach { p =>
+      if (p.toString.endsWith(".scala")) {
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        val n = re.findAllIn(src).matchData.count { m =>
+          val lineStart = src.lastIndexOf('\n', m.start) + 1
+          val lead = src.slice(lineStart, m.start).trim
+          !lead.startsWith("*") && !lead.startsWith("//")
+        }
+        if (n > 0) found(root.relativize(p).toString) = n
+      }
+    }
+    found.toMap
+  }
+
   test("unpartitioned windows are confined to the audited bounded-input sites") {
     // A Window.orderBy with NO partitionBy plans as a single-partition
     // global sort — fine on a bounded/validation-mode input, a cluster
@@ -334,23 +355,8 @@ class PlanShapeSpec extends AnyFunSuite {
       "store/Store.scala" -> 1,
       // per-sheet row numbering at READ: sheets are workbook-sized
       "etl/Transform.scala" -> 1)
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val re = """Window(\s*\n\s*)?\.orderBy""".r
-    val found = scala.collection.mutable.Map.empty[String, Int]
-    java.nio.file.Files.walk(root).forEach { p =>
-      if (p.toString.endsWith(".scala")) {
-        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val n = re.findAllIn(src)
-          // ignore mentions inside comments/scaladoc (lines led by * or //)
-          .matchData.count { m =>
-            val lineStart = src.lastIndexOf('\n', m.start) + 1
-            val lead = src.slice(lineStart, m.start).trim
-            !lead.startsWith("*") && !lead.startsWith("//")
-          }
-        if (n > 0) found(root.relativize(p).toString) = n
-      }
-    }
-    assert(found.toMap == allowed,
+    val found = codeSites("""Window(\s*\n\s*)?\.orderBy""")
+    assert(found == allowed,
       s"unpartitioned Window sites changed: found=$found allowed=$allowed — " +
         "partition the new window or audit it into this allowlist with a " +
         "bounded-input justification")
@@ -392,30 +398,23 @@ class PlanShapeSpec extends AnyFunSuite {
       "text/TextOps.scala" -> 5,
       // q_x_ann oracle harness (8-query broadcast) + near-dup 1-row agg
       "SparkEntry.scala" -> 2,
-      // drift probe's exact-L2 ground truth: broadcast query side
-      // (probe-batch-sized), dev harness only
-      "dev/CentroidDriftProbe.scala" -> 1,
       // curationRender's corpus total: a 1-row aggregate side riding the
       // render query (replaces an eager driver count — r16)
       "streaming/StreamOps.scala" -> 1)
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val re = """\.crossJoin\(""".r
-    val found = scala.collection.mutable.Map.empty[String, Int]
-    java.nio.file.Files.walk(root).forEach { p =>
-      if (p.toString.endsWith(".scala")) {
-        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val n = re.findAllIn(src).matchData.count { m =>
-          val lineStart = src.lastIndexOf('\n', m.start) + 1
-          val lead = src.slice(lineStart, m.start).trim
-          !lead.startsWith("*") && !lead.startsWith("//")
-        }
-        if (n > 0) found(root.relativize(p).toString) = n
-      }
-    }
-    assert(found.toMap == allowed,
+    val found = codeSites("""\.crossJoin\(""")
+    assert(found == allowed,
       s"crossJoin sites changed: found=$found allowed=$allowed — bound the " +
         "new cross product (broadcast a 1-row/driver-sized side, or cap " +
         "and document a validation mode) and audit it into this allowlist")
+  }
+
+  test("every SparkSession is built by GraftSession") {
+    // one conf set for every main and the test session: each extra
+    // builder is a place for the session's confs to drift apart
+    val found = codeSites("""SparkSession\s*\.\s*builder""")
+    assert(found == Map("GraftSession.scala" -> 1),
+      s"SparkSession builders outside GraftSession: $found — build the " +
+        "session with GraftSession.builder/local instead")
   }
 
   test("substring dedup: reassembly agg reuses the coverage window's doc partitioning") {

@@ -5,16 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** One SparkSession shared by every suite (forked test JVM). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse_").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -25,6 +25,14 @@ class JsonSpec extends AnyFunSuite {
     assert(v("s") == "a\"b\\c\nA")
   }
 
+  test("quote round-trips quote, backslash and control characters") {
+    val raw = "a\"b\\c\td\ne" + '\u0001'
+    val quoted = Json.quote(raw)
+    assert(!quoted.exists(_ < ' '), "a raw control character reached the output")
+    assert(Json.parse(quoted) == raw)
+    assert(Json.parse(s"{${Json.quote("k\t")}: $quoted}") == Map("k\t" -> raw))
+  }
+
   test("malformed documents rejected") {
     for (bad <- Seq("{", """{"a" 1}""", """{"a": }""", """[1,]""",
         """{"a": 1} trailing""", "\"unterminated", """{"a": 01x}""", ""))
