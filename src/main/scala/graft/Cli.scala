@@ -1,13 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.etl.Config
 import graft.io.WorkbookReader
+import graft.ops.{JsonProfile, Lease, Privacy, Skew}
+import graft.ops.Compaction.CompactionStats
 import graft.serve.{Facade, HttpApi}
+import graft.streaming.StreamOps
+import graft.text.{Chat, CorpusStats, Corruption, DataCard, DedupIndex, Dsir,
+  Eval, GenEval, Html, Labels, Preference, Readability, Sharding, SubstrIndex,
+  TextOps, UrlOps, Winnow, WinnowIndex, Wordpiece}
+import graft.vec.{Align, Bitext, ClusterEval, Coreset, GraphAnn, LabelProp,
+  Mmr, Quantize, Reduce, VecIndex, VectorOps}
 
-/** Command-line surface — the reference's Typer CLI verbs (cli.py) over
-  * the facade:
+/** Command-line surface — the reference's Typer CLI verbs (cli.py). The
+  * collection verbs (ingest through serve) run on a [[Facade]] over
+  * `<root>/<collection>`. The corpus verbs call their operators directly
+  * on the parquet inputs they name and touch no collection: they keep
+  * the `<root> <collection>` positionals only so every command line has
+  * one shape.
   *
   * {{{
   * (the <root> and <outDir> positionals accept '-' = persisted default
@@ -90,16 +103,57 @@ object Cli {
     val root = orDefault(rootArg, Settings.defaultRoot)
     val rest = args.drop(3)
 
-    // when embedded (tests, notebooks) getOrCreate returns the caller's
-    // session — which the CLI must then NOT stop on exit
-    val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = GraftSession.builder(
-        sys.env.getOrElse("GRAFT_MASTER", "local[*]"),
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32").toInt)
-      .appName(s"graft-$collection")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val facade = new Facade(spark, root, collection)
+    // embedded (tests, notebooks), the verbs run on a child of the host's
+    // session: it shares the SparkContext, which the CLI must then NOT
+    // stop, but not the host's SQL confs, which it must not overwrite
+    val partitions = sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32").toInt
+    val host = SparkSession.getDefaultSession
+    val spark = host match {
+      case Some(h) =>
+        val s = h.newSession()
+        GraftSession.sqlConfs(partitions).foreach { case (k, v) => s.conf.set(k, v) }
+        s
+      case None =>
+        val s = GraftSession.builder(
+            sys.env.getOrElse("GRAFT_MASTER", "local[*]"), partitions)
+          .appName(s"graft-$collection")
+          .getOrCreate()
+        s.sparkContext.setLogLevel("WARN")
+        s
+    }
+    import spark.implicits._
+    lazy val facade = new Facade(spark, root, collection)
+
+    // corpus verbs: positionals before `--out D`; with it the frame is
+    // written as parquet, else shown
+    val out = rest.sliding(2).collectFirst {
+      case Array("--out", d) if !d.startsWith("--") => d
+    }
+    val pos = rest.takeWhile(_ != "--out")
+    def p(i: Int, default: String) = pos.lift(i).getOrElse(default)
+    def read(i: Int): DataFrame = spark.read.parquet(pos(i))
+    def list(i: Int, default: String) =
+      p(i, default).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    def emit(frame: DataFrame): Unit = out match {
+      case Some(d) => frame.write.mode("overwrite").parquet(d)
+        println(s"wrote $d")
+      case None => frame.show(50, truncate = false)
+    }
+    def badMode(mode: String, expected: String) =
+      throw new IllegalArgumentException(s"$verb mode '$mode' (expected $expected)")
+    // a kNN graph over the corpus with nlist scaled so lists stay ~250
+    // vectors
+    def knnEdges(c: DataFrame, idCol: String, vecCol: String, degree: Int) = {
+      val nlist = math.max(1, (c.count() / 250).toInt)
+      VectorOps.knnGraph(c, idCol, vecCol, degree,
+          nlist = nlist, nassign = math.min(2, nlist))
+        .select(col("src_id"), col("dst_id"))
+    }
+    def compacted(stats: Seq[(String, CompactionStats)]): DataFrame =
+      stats.map { case (c, s) =>
+        (c, s.filesBefore, s.bytesBefore, s.filesAfter, s.bytesAfter) }
+        .toDF("component", "files_before", "bytes_before",
+          "files_after", "bytes_after")
 
     verb match {
       case "ingest" =>
@@ -172,149 +226,231 @@ object Cli {
         println(s"serving http://127.0.0.1:$port/data/$collection  (ctrl-c to stop)")
         Thread.currentThread.join()
 
-      // corpus verbs — the text-family operators at the CLI (the
-      // reference exposes every capability through cli.py; these are
-      // the round-8 families'). `--out D` writes parquet, else show().
-      case "chat-stats" | "html-extract" | "pref-stats" | "json-profile"
-         | "chunk" | "embed-reduce" | "wordpiece" | "sq8-audit" | "mmr"
-         | "dsir" | "eval" | "coreset" | "graph-ann" | "gen-eval"
-         | "rank-eval" | "winnow" | "corrupt" | "bitext" | "diversity"
-         | "align" | "shard-audit" | "label-prop" | "winnow-index"
-         | "label-audit" | "bradley-terry" | "privacy-audit"
-         | "url-curate" | "substring-dedup" | "substr-index" | "readability"
-         | "skew-report" | "silhouette"
-         | "data-card" | "zipf" | "novelty" | "curation"
-         | "dedup-index" | "vec-index" =>
-        val out = rest.sliding(2).collectFirst {
-          case Array("--out", d) if !d.startsWith("--") => d
+      case "chat-stats" =>
+        emit(Chat.stats(read(0), p(1, "doc_id"), p(2, "text")))
+      case "html-extract" =>
+        val html = col(p(2, "text"))
+        emit(read(0).select(col(p(1, "doc_id")), Html.mainText(html).as("txt"),
+          Html.linkCount(html).as("links")))
+      case "pref-stats" =>
+        emit(Preference.pairStats(read(0), p(1, "pair_id"), p(2, "prompt"),
+          p(3, "chosen"), p(4, "rejected")))
+      case "json-profile" =>
+        // with no keys, the top-level key-coverage profile; with keys,
+        // per-key field stats
+        val keys = list(2, "")
+        emit(if (keys.isEmpty) JsonProfile.keyProfile(read(0), p(1, "text"))
+          else JsonProfile.fieldStats(read(0), p(1, "text"), keys))
+      case "chunk" =>
+        emit(TextOps.chunkSentences(read(0), p(1, "doc_id"), p(2, "text"),
+          p(3, "256").toInt))
+      case "embed-reduce" =>
+        val (vecCol, inDim, outDim) = (p(2, "embedding"), p(3, "64").toInt, p(4, "16").toInt)
+        emit(p(1, "rp") match {
+          case "rp" => Reduce.randomProject(read(0), vecCol, "proj", inDim, outDim)
+          case "pca" =>
+            val df = read(0)
+            Reduce.pcaProject(df, vecCol, "proj", Reduce.pca(df, vecCol, inDim), outDim)
+          case m => badMode(m, "rp|pca")
+        })
+      case "wordpiece" =>
+        // vocab derived from the corpus: top words + character alphabet
+        val (df, textCol) = (read(0), p(2, "text"))
+        val vocab = Wordpiece.buildVocab(df, textCol, p(3, "30").toInt)
+        emit(Wordpiece.encode(df, p(1, "doc_id"), textCol, vocab))
+      case "sq8-audit" =>
+        val (df, vecCol) = (read(0), p(2, "embedding"))
+        val model = Quantize.sq8Train(df, vecCol, p(3, "64").toInt)
+        emit(Quantize.sq8ReconError(df, p(1, "vec_id"), vecCol, model))
+      case "mmr" =>
+        emit(Mmr.mmrTopK(read(0), read(1), "vec_id", "embedding",
+          p(2, "5").toInt, p(3, "0.7").toDouble, p(4, "20").toInt))
+      case "dsir" =>
+        // n = 0 returns the per-doc weights instead of the draw
+        val (raw, idCol, textCol, n) = (read(0), p(3, "doc_id"), p(4, "text"), p(2, "0").toInt)
+        val model = Dsir.fit(read(1), raw, textCol, idCol)
+        emit(if (n == 0) Dsir.logWeights(raw, idCol, textCol, model)
+          else Dsir.resample(raw, idCol, textCol, model, n))
+      case "eval" =>
+        val (scoreCol, labelCol, k) = (p(2, "score"), p(3, "label"), p(4, "10").toInt)
+        emit(p(1, "auc") match {
+          case "auc" => Eval.auc(read(0), scoreCol, labelCol)
+          case "calibration" => Eval.calibration(read(0), scoreCol, labelCol, bins = k)
+          case "pr" => Eval.prAtK(read(0), "doc_id", scoreCol, labelCol, k)
+          case m => badMode(m, "auc|calibration|pr")
+        })
+      case "coreset" =>
+        emit(Coreset.kCenterGreedy(read(0), p(1, "vec_id"), p(2, "embedding"),
+          p(3, "8").toInt))
+      case "graph-ann" =>
+        val c = read(0)
+        emit(GraphAnn.beamSearch(c, knnEdges(c, "vec_id", "embedding", 6), read(1),
+          "vec_id", "embedding", p(2, "5").toInt, p(3, "8").toInt, p(4, "4").toInt))
+      case "gen-eval" =>
+        val (idCol, candCol, refCol, n) = (p(2, "id"), p(3, "cand"), p(4, "ref"), p(5, "4").toInt)
+        emit(p(1, "rouge2") match {
+          case "rouge1" => GenEval.rougeN(read(0), idCol, candCol, refCol, 1)
+          case "rouge2" => GenEval.rougeN(read(0), idCol, candCol, refCol, 2)
+          case "rougeN" => GenEval.rougeN(read(0), idCol, candCol, refCol, n)
+          case "rougeL" => GenEval.rougeL(read(0), idCol, candCol, refCol)
+          case "bleu" => GenEval.bleu(read(0), candCol, refCol, n)
+          case "chrf" => GenEval.chrF(read(0), idCol, candCol, refCol)
+          case m => badMode(m, "rouge1|rouge2|rougeN|rougeL|chrf|bleu")
+        })
+      case "rank-eval" =>
+        // summary = the one-row MRR / mean-nDCG / mean-recall scoreboard
+        val rank = if (p(3, "summary") == "summary") Eval.rankSummary _ else Eval.rankMetrics _
+        emit(rank(read(0), read(1), "query_id", "doc_id", "rank", "rel", p(2, "10").toInt))
+      case "winnow" =>
+        val (idCol, textCol, k, w) = (p(2, "doc_id"), p(3, "text"), p(4, "8").toInt, p(5, "4").toInt)
+        emit(p(1, "overlap") match {
+          case "fingerprints" => Winnow.fingerprints(read(0), idCol, textCol, k, w)
+          case "overlap" => Winnow.overlap(read(0), idCol, textCol, k, w)
+          case m => badMode(m, "fingerprints|overlap")
+        })
+      case "corrupt" =>
+        val (idCol, textCol) = (p(2, "doc_id"), p(3, "text"))
+        emit(p(1, "span") match {
+          case "fim" => Corruption.fimSplit(read(0), idCol, textCol)
+          case "span" => Corruption.spanCorrupt(read(0), idCol, textCol,
+            p(4, "20").toInt, p(5, "3").toInt)
+          case m => badMode(m, "fim|span")
+        })
+      case "bitext" =>
+        val k = p(3, "4").toInt
+        emit(p(2, "pairs") match {
+          case "margin" => Bitext.marginScores(read(0), read(1), "vec_id", "embedding", k)
+          case "pairs" => Bitext.minePairs(read(0), read(1), "vec_id", "embedding", k,
+            p(4, "1.0").toDouble)
+          case m => badMode(m, "margin|pairs")
+        })
+      case "diversity" =>
+        emit(GenEval.diversity(read(0), p(1, "text"), ns = 1 to p(2, "3").toInt,
+          groupCols = pos.lift(3).filter(_.nonEmpty).toSeq))
+      case "align" =>
+        // learn the orthogonal map from the seed pairs, apply it to the vectors
+        val w = Align.procrustes(read(0), p(2, "x"), p(3, "y"), p(5, "64").toInt)
+        emit(Align.applyMap(read(1), p(4, "embedding"), "aligned", w))
+      case "shard-audit" =>
+        emit(Sharding.audit(read(0), p(1, "doc_id"), p(2, "text"), p(3, "8").toInt))
+      case "label-prop" =>
+        val idCol = p(2, "vec_id")
+        emit(LabelProp.propagate(knnEdges(read(0), idCol, p(3, "embedding"), 4),
+          read(1), idCol, p(4, "label"), p(5, "3").toInt))
+      case "winnow-index" =>
+        val (idx, idCol, textCol) = (pos(1), p(3, "doc_id"), p(4, "text"))
+        emit(p(2, "probe") match {
+          case "ingest" =>
+            Seq(WinnowIndex.ingestBatch(spark, idx, read(0), idCol, textCol)).toDF("n_indexed")
+          case "probe" => WinnowIndex.probeBatch(spark, idx, read(0), idCol, textCol)
+          case "compact" => Seq(WinnowIndex.compact(spark, idx)).toDF("n_rows_compacted")
+          case m => badMode(m, "ingest|probe|compact")
+        })
+      case "label-audit" =>
+        val labels = p(1, "consensus") match {
+          case "consensus" => Labels.majorityVote _
+          case "accuracy" => Labels.annotatorAccuracy _
+          case "cohen" => Labels.cohenKappa _
+          case "fleiss" => Labels.fleissKappa _
+          case "alpha" => Labels.krippendorffAlpha _
+          case "confusion" => Labels.confusionMatrix _
+          case m => badMode(m, "consensus|accuracy|cohen|fleiss|alpha|confusion")
         }
-        val pos = rest.takeWhile(_ != "--out")
-        val inPath = pos(0)
-        def p(i: Int, default: String) = pos.lift(i).getOrElse(default)
-        val frame = verb match {
-          case "chat-stats" =>
-            facade.chatStats(inPath, p(1, "doc_id"), p(2, "text"))
-          case "html-extract" =>
-            facade.htmlExtract(inPath, p(1, "doc_id"), p(2, "text"))
-          case "pref-stats" =>
-            facade.prefStats(inPath, p(1, "pair_id"), p(2, "prompt"),
-              p(3, "chosen"), p(4, "rejected"))
-          case "chunk" =>
-            facade.chunk(inPath, p(1, "doc_id"), p(2, "text"),
-              p(3, "256").toInt)
-          case "embed-reduce" =>
-            facade.embedReduce(inPath, p(1, "rp"), p(2, "embedding"),
-              p(3, "64").toInt, p(4, "16").toInt)
-          case "wordpiece" =>
-            facade.wordpiece(inPath, p(1, "doc_id"), p(2, "text"),
-              p(3, "30").toInt)
-          case "sq8-audit" =>
-            facade.sq8Audit(inPath, p(1, "vec_id"), p(2, "embedding"),
-              p(3, "64").toInt)
-          case "mmr" =>
-            facade.mmr(inPath, pos(1), "vec_id", "embedding",
-              p(2, "5").toInt, p(3, "0.7").toDouble, p(4, "20").toInt)
-          case "dsir" =>
-            facade.dsir(inPath, pos(1), p(3, "doc_id"), p(4, "text"),
-              p(2, "0").toInt)
-          case "eval" =>
-            facade.evalMetric(inPath, p(1, "auc"), p(2, "score"),
-              p(3, "label"), k = p(4, "10").toInt)
-          case "coreset" =>
-            facade.coreset(inPath, p(1, "vec_id"), p(2, "embedding"),
-              p(3, "8").toInt)
-          case "graph-ann" =>
-            facade.graphAnn(inPath, pos(1), "vec_id", "embedding",
-              p(2, "5").toInt, p(3, "8").toInt, p(4, "4").toInt)
-          case "gen-eval" =>
-            facade.genEval(inPath, p(1, "rouge2"), p(2, "id"),
-              p(3, "cand"), p(4, "ref"), p(5, "4").toInt)
-          case "rank-eval" =>
-            facade.rankEval(inPath, pos(1), p(2, "10").toInt,
-              summary = p(3, "summary") == "summary")
-          case "winnow" =>
-            facade.winnow(inPath, p(1, "overlap"), p(2, "doc_id"),
-              p(3, "text"), p(4, "8").toInt, p(5, "4").toInt)
-          case "corrupt" =>
-            facade.corrupt(inPath, p(1, "span"), p(2, "doc_id"),
-              p(3, "text"), p(4, "20").toInt, p(5, "3").toInt)
-          case "bitext" =>
-            facade.bitext(inPath, pos(1), p(2, "pairs"), "vec_id",
-              "embedding", p(3, "4").toInt, p(4, "1.0").toDouble)
-          case "diversity" =>
-            facade.diversity(inPath, p(1, "text"), p(2, "3").toInt,
-              pos.lift(3).filter(_.nonEmpty))
-          case "align" =>
-            facade.align(inPath, pos(1), p(2, "x"), p(3, "y"),
-              p(4, "embedding"), p(5, "64").toInt)
-          case "shard-audit" =>
-            facade.shardAudit(inPath, p(1, "doc_id"), p(2, "text"),
-              p(3, "8").toInt)
-          case "label-prop" =>
-            facade.labelProp(inPath, pos(1), p(2, "vec_id"),
-              p(3, "embedding"), p(4, "label"), p(5, "3").toInt)
-          case "winnow-index" =>
-            facade.winnowIndex(inPath, pos(1), p(2, "probe"),
-              p(3, "doc_id"), p(4, "text"))
-          case "label-audit" =>
-            facade.labelAudit(inPath, p(1, "consensus"), p(2, "item"),
-              p(3, "annotator"), p(4, "label"))
-          case "bradley-terry" =>
-            facade.bradleyTerry(inPath, p(1, "winner"), p(2, "loser"),
-              p(3, "8").toInt)
-          case "privacy-audit" =>
-            facade.privacyAudit(inPath, p(1, "report"),
-              p(2, "zip").split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-              p(3, "10").toLong, p(4, ""), p(5, "0.2").toDouble)
-          case "url-curate" =>
-            facade.urlCurate(inPath, p(1, "canon"), p(2, "url"))
-          case "substring-dedup" =>
-            facade.substringDedup(inPath, p(1, "stats"), p(3, "doc_id"),
-              p(4, "text"), p(2, "50").toInt)
-          case "substr-index" =>
-            facade.substrIndex(inPath, pos(1), p(2, "probe"),
-              minTokens = p(3, "50").toInt, targetBytes = p(4, "0").toLong,
-              ttlMs = p(5, graft.ops.Lease.DefaultTtlMs.toString).toLong)
-          case "readability" =>
-            facade.readability(inPath, p(1, "doc_id"), p(2, "text"))
-          case "skew-report" =>
-            facade.skewReport(inPath,
-              p(1, "key").split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-              p(2, "1000000").toLong)
-          case "silhouette" =>
-            facade.silhouette(inPath, p(1, "vec_id"), p(2, "embedding"),
-              p(3, "label"), p(4, "64").toInt)
-          case "data-card" =>
-            facade.dataCard(inPath, p(1, "doc_id"), p(2, "text"),
-              p(3, "lang"), p(4, "source"))
-          case "curation" =>
-            facade.curation(inPath, p(1, "render"), p(2, "20").toInt,
-              p(3, "doc_id"), p(4, "source"), p(5, "0").toLong)
-          case "dedup-index" =>
-            facade.dedupIndexMaint(inPath, p(1, "status"), p(2, "0").toLong,
-              p(3, graft.ops.Lease.DefaultTtlMs.toString).toLong)
-          case "vec-index" =>
-            facade.vecIndexMaint(inPath, p(1, "status"), p(2, "0").toLong,
-              p(3, graft.ops.Lease.DefaultTtlMs.toString).toLong)
-          case "zipf" =>
-            facade.zipf(inPath, p(1, "text"), p(2, "100").toInt)
-          case "novelty" =>
-            facade.novelty(inPath, p(1, "doc_id"), p(2, "text"),
-              p(3, "3").toInt)
-          case _ =>
-            val keys = pos.lift(2).map(_.split(",").map(_.trim)
-              .filter(_.nonEmpty).toSeq).getOrElse(Nil)
-            facade.jsonProfile(inPath, p(1, "text"), keys)
-        }
-        out match {
-          case Some(d) => frame.write.mode("overwrite").parquet(d)
-            println(s"wrote $d")
-          case None => frame.show(50, truncate = false)
-        }
+        emit(labels(read(0), p(2, "item"), p(3, "annotator"), p(4, "label")))
+      case "bradley-terry" =>
+        emit(Labels.bradleyTerry(read(0), p(1, "winner"), p(2, "loser"), p(3, "8").toInt))
+      case "privacy-audit" =>
+        val quasi = list(2, "zip").map(c => c -> col(c))
+        val (k, sensitive) = (p(3, "10").toLong, p(4, ""))
+        emit(p(1, "report") match {
+          case "classes" => Privacy.kAnonymity(read(0), quasi, k)
+          case "report" => Privacy.kAnonymityReport(read(0), quasi, k)
+          case "ldiv" => Privacy.lDiversity(read(0), quasi, sensitive, k)
+          case "tclose" => Privacy.tCloseness(read(0), quasi, sensitive, p(5, "0.2").toDouble)
+          case m => badMode(m, "classes|report|ldiv|tclose")
+        })
+      case "url-curate" =>
+        val url = col(p(2, "url"))
+        emit(p(1, "canon") match {
+          case "canon" => read(0).withColumn("canonical", UrlOps.canonicalizeUrl(url))
+          case "domain" => read(0).withColumn("domain",
+            UrlOps.registrableDomain(UrlOps.hostOf(url)))
+          case "dedup" => UrlOps.urlDedupStats(read(0), p(2, "url"))
+          case m => badMode(m, "canon|domain|dedup")
+        })
+      case "substring-dedup" =>
+        // "stats" sizes a cut before committing to it
+        val (idCol, textCol, minTokens) = (p(3, "doc_id"), p(4, "text"), p(2, "50").toInt)
+        emit(p(1, "stats") match {
+          case "cut" => TextOps.dedupSubstrings(read(0), idCol, textCol, minTokens)
+          case "stats" => TextOps.substringDedupStats(read(0), idCol, textCol, minTokens)
+          case m => badMode(m, "cut|stats")
+        })
+      case "substr-index" =>
+        val (idx, params, targetBytes) =
+          (pos(1), SubstrIndex.Params(p(3, "50").toInt), p(4, "0").toLong)
+        emit(p(2, "probe") match {
+          case "probe" => SubstrIndex.probeBatch(read(0), idx, "doc_id", "text", params)
+          case "ingest" => SubstrIndex.ingestBatch(read(0), idx, "doc_id", "text", params)
+          case "status" => SubstrIndex.maintenanceDue(spark, idx, targetBytes = targetBytes)
+          case "compact" => compacted(SubstrIndex.compact(spark, idx, targetBytes,
+            p(5, Lease.DefaultTtlMs.toString).toLong).map("grams" -> _).toSeq)
+          case m => badMode(m, "probe|ingest|status|compact")
+        })
+      case "readability" =>
+        emit(Readability.flesch(read(0), p(1, "doc_id"), p(2, "text")))
+      case "skew-report" =>
+        emit(Skew.skewReport(read(0), list(1, "key"), p(2, "1000000").toLong))
+      case "silhouette" =>
+        emit(ClusterEval.silhouette(read(0), p(1, "vec_id"), p(2, "embedding"),
+          p(3, "label"), p(4, "64").toInt))
+      case "data-card" =>
+        emit(DataCard.perSource(read(0), p(1, "doc_id"), p(2, "text"),
+          p(3, "lang"), p(4, "source")))
+      case "zipf" =>
+        emit(CorpusStats.zipfFit(read(0), p(1, "text"), p(2, "100").toInt))
+      case "novelty" =>
+        emit(CorpusStats.ngramNovelty(read(0), p(1, "doc_id"), p(2, "text"), p(3, "3").toInt))
+      case "curation" =>
+        // "compact" folds every partials family plus the dedup corpus of a
+        // quiesced pipeline; "compact-if-due" only when "status" says so.
+        // targetBytes > 0 switches the policy and the corpus file target
+        // to the byte rule
+        val (pipe, idCol, targetBytes) = (pos(0), p(3, "doc_id"), p(5, "0").toLong)
+        def folded(r: (Int, Int)) = Seq((r._1.toLong, r._2.toLong))
+          .toDF("n_partials_folded", "n_corpus_files_folded")
+        emit(p(1, "render") match {
+          case "render" => StreamOps.curationRender(spark, pipe,
+            capK = p(2, "20").toInt, idCol = idCol, sourceCol = p(4, "source"))
+          case "compact" => folded(StreamOps.curationCompact(spark, pipe, idCol,
+            targetBytes = targetBytes))
+          case "compact-if-due" => folded(StreamOps.curationCompactIfDue(spark, pipe,
+            idCol = idCol, targetBytes = targetBytes))
+          case "status" => StreamOps.maintenanceDue(spark, pipe, targetBytes = targetBytes)
+          case m => badMode(m, "render|compact|compact-if-due|status")
+        })
+      case "dedup-index" =>
+        // 0 = the callee's default compaction target; the lease TTL is the
+        // deployment's crash-detection knob
+        val targetBytes = p(2, "0").toLong
+        emit(p(1, "status") match {
+          case "status" => DedupIndex.maintenanceDue(spark, pos(0), targetBytes = targetBytes)
+          case "compact" => compacted(DedupIndex.compact(spark, pos(0), targetBytes,
+            p(3, Lease.DefaultTtlMs.toString).toLong).toSeq.sortBy(_._1))
+          case m => badMode(m, "status|compact")
+        })
+      case "vec-index" =>
+        val targetBytes = p(2, "0").toLong
+        emit(p(1, "status") match {
+          case "status" => VecIndex.maintenanceDue(spark, pos(0), targetBytes = targetBytes)
+          case "compact-lists" => compacted(Seq("lists" -> VecIndex.compactLists(spark,
+            pos(0), targetBytes, p(3, Lease.DefaultTtlMs.toString).toLong)))
+          case m => badMode(m, "status|compact-lists")
+        })
 
       case other =>
         throw new IllegalArgumentException(s"unknown verb '$other'")
     }
-    if (verb != "serve" && !preExisting) spark.stop()
+    if (verb != "serve" && host.isEmpty) spark.stop()
   }
 }

@@ -21,13 +21,18 @@ import org.apache.spark.sql.SparkSession
   * (an app name, a warehouse dir) before `getOrCreate()`. */
 object GraftSession {
 
+  /** The runtime SQL confs: [[builder]] sets them on a new session, and a
+    * CLI embedded in a host's session sets them on `host.newSession()`. */
+  def sqlConfs(shufflePartitions: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(sqlConfs(shufflePartitions).toMap)
       .config("spark.ui.enabled", "false")
 
   /** A session on `local[cpus]` with `cpus` shuffle partitions. */

@@ -1,13 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CLI dispatch for the corpus verbs (chat-stats / html-extract /
-  * pref-stats / json-profile): positional + `--out` parsing, facade
-  * wiring, parquet output. Runs `Cli.main` embedded — the CLI detects
-  * the pre-existing test session and must leave it running. */
+/** CLI dispatch for the corpus verbs: positional + `--out` parsing,
+  * operator wiring, parquet output. A corpus verb calls its operator
+  * directly and touches no collection, so `<root>` stays empty. Runs
+  * `Cli.main` embedded — the CLI detects the pre-existing test session,
+  * runs on a child of it and must leave it running with its confs. */
 class CliCorpusSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -20,6 +21,8 @@ class CliCorpusSpec extends AnyFunSuite {
     Seq((1L, chat), (2L, "{bad")).toDF("doc_id", "text")
       .write.parquet(s"$dir/chat")
 
+    val confs = Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
+    val hostConfs = confs.map(spark.conf.get)
     Cli.main(Array(root, "c1", "chat-stats", s"$dir/chat",
       "doc_id", "text", "--out", s"$dir/chat_out"))
     val cs = spark.read.parquet(s"$dir/chat_out")
@@ -27,6 +30,9 @@ class CliCorpusSpec extends AnyFunSuite {
       .map(r => r._1 -> r).toMap
     assert(cs(1L)._6 && !cs(2L)._6)
     assert(!spark.sparkContext.isStopped, "CLI must not stop the host session")
+    assert(confs.map(spark.conf.get) == hostConfs, "CLI must not change the host's confs")
+    assert(Seq("_ingest_log", "_lease").forall(f => !Files.exists(Paths.get(root, f))),
+      "a corpus verb must not write into the collection root")
 
     Seq((1L, """{"a":1,"b":2}"""), (2L, """{"a":3}"""))
       .toDF("doc_id", "text").write.parquet(s"$dir/jsonl")
@@ -165,6 +171,14 @@ class CliCorpusSpec extends AnyFunSuite {
     val ga = spark.read.parquet(s"$dir/ga_out")
     assert(ga.count() == 6) // 3 queries x k=2
     assert(ga.columns.toSeq == Seq("query_id", "rank", "neighbor_id", "cos"))
+
+    // label-prop spreads two seed labels over the same kNN graph shape
+    Seq((1L, "a"), (2L, "b")).toDF("vec_id", "label").write.parquet(s"$dir/seeds")
+    Cli.main(Array(root, "c1", "label-prop", s"$dir/emb", s"$dir/seeds",
+      "vec_id", "embedding", "label", "2", "--out", s"$dir/lp_out"))
+    val lp = spark.read.parquet(s"$dir/lp_out")
+    assert(lp.columns.toSeq == Seq("vec_id", "label", "is_seed"))
+    assert(lp.count() > 2 && lp.where($"is_seed").count() == 2)
   }
 
   test("gen-eval and rank-eval verbs dispatch and write parquet") {
@@ -228,6 +242,20 @@ class CliCorpusSpec extends AnyFunSuite {
       "content_hash", "min_id", "max_id"))
     assert(sa.agg(org.apache.spark.sql.functions.sum("n_docs"))
       .head().getLong(0) == 2)
+
+    // winnow and corrupt run over the same two docs
+    Cli.main(Array(root, "c1", "winnow", s"$dir/corpus", "overlap",
+      "doc_id", "text", "8", "4", "--out", s"$dir/wn_out"))
+    val wn = spark.read.parquet(s"$dir/wn_out")
+    assert(wn.columns.toSeq == Seq("left_id", "right_id", "n_shared"))
+    assert(wn.select("left_id", "right_id").as[(Long, Long)].collect().toSeq == Seq((1L, 2L)))
+    Cli.main(Array(root, "c1", "corrupt", s"$dir/corpus", "span",
+      "doc_id", "text", "4", "1", "--out", s"$dir/cr_out"))
+    val cr = spark.read.parquet(s"$dir/cr_out")
+    assert(cr.columns.toSeq == Seq("doc_id", "n_tokens", "n_masked", "inputs", "targets"))
+    // 11 tokens: two full 4-token blocks, one token masked in each
+    assert(cr.select("n_tokens", "n_masked").as[(Long, Long)].collect().toSet ==
+      Set((11L, 2L)))
 
     Cli.main(Array(root, "c1", "winnow-index", s"$dir/corpus",
       s"$dir/widx", "ingest", "--out", s"$dir/wi_out"))
@@ -396,6 +424,31 @@ class CliCorpusSpec extends AnyFunSuite {
     Cli.main(Array(root, "c1", "silhouette", s"$dir/vecs", "vec_id",
       "embedding", "label", "1", "--out", s"$dir/si_out"))
     assert(spark.read.parquet(s"$dir/si_out").count() == 2L)
+
+    // zipf, novelty and data-card over one three-doc corpus
+    Seq((1L, "a b a c", "en", "web"), (2L, "a b d", "en", "web"),
+      (3L, "x y z", "fr", "books"))
+      .toDF("doc_id", "text", "lang", "source").write.parquet(s"$dir/corpus")
+    Cli.main(Array(root, "c1", "zipf", s"$dir/corpus", "text", "3",
+      "--out", s"$dir/zf_out"))
+    val zf = spark.read.parquet(s"$dir/zf_out")
+    assert(zf.columns.toSeq ==
+      Seq("vocab_size", "total_tokens", "top_k", "slope", "intercept", "r2"))
+    assert(zf.as[(Long, Long, Long, Double, Double, Double)].head()._1 == 7L)
+    Cli.main(Array(root, "c1", "novelty", s"$dir/corpus", "doc_id", "text",
+      "2", "--out", s"$dir/nv_out"))
+    val nv = spark.read.parquet(s"$dir/nv_out")
+    assert(nv.columns.toSeq == Seq("doc_id", "n_grams", "n_novel", "novelty"))
+    // bigram "a b" is shared by docs 1 and 2; doc 3's are all novel
+    assert(nv.as[(Long, Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap ==
+      Map(1L -> 2L, 2L -> 1L, 3L -> 2L))
+    Cli.main(Array(root, "c1", "data-card", s"$dir/corpus",
+      "--out", s"$dir/dc_out"))
+    val dc = spark.read.parquet(s"$dir/dc_out")
+    assert(dc.columns.toSeq == Seq("source", "n_docs", "n_tokens", "mean_tokens",
+      "dup_ratio", "pii_per_doc", "mean_reading_ease", "top_lang", "top_lang_share"))
+    assert(dc.select("source", "n_docs", "top_lang").as[(String, Long, String)]
+      .collect().toSet == Set(("web", 2L, "en"), ("books", 1L, "fr")))
     assert(!spark.sparkContext.isStopped)
   }
 
