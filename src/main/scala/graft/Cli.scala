@@ -98,29 +98,32 @@ object Cli {
     // `graft.Cli config --root ...` (reference: settings read from
     // config.ini on every CLI run)
     val Array(rootArg, collection, verb) = args.take(3)
-    def orDefault(arg: String, default: => String) =
-      if (arg == "-") default else arg
     val root = orDefault(rootArg, Settings.defaultRoot)
     val rest = args.drop(3)
 
-    // embedded (tests, notebooks), the verbs run on a child of the host's
-    // session: it shares the SparkContext, which the CLI must then NOT
-    // stop, but not the host's SQL confs, which it must not overwrite
+    // embedded (tests, notebooks), the verbs run on the host's session,
+    // which the CLI must then NOT stop, with the host's SQL confs put
+    // back afterwards
     val partitions = sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32").toInt
-    val host = SparkSession.getDefaultSession
-    val spark = host match {
-      case Some(h) =>
-        val s = h.newSession()
-        GraftSession.sqlConfs(partitions).foreach { case (k, v) => s.conf.set(k, v) }
-        s
+    SparkSession.getDefaultSession match {
+      case Some(host) =>
+        GraftSession.withSqlConfs(host, partitions)(run(host, root, collection, verb, rest))
       case None =>
-        val s = GraftSession.builder(
+        val spark = GraftSession.builder(
             sys.env.getOrElse("GRAFT_MASTER", "local[*]"), partitions)
           .appName(s"graft-$collection")
           .getOrCreate()
-        s.sparkContext.setLogLevel("WARN")
-        s
+        spark.sparkContext.setLogLevel("WARN")
+        run(spark, root, collection, verb, rest)
+        if (verb != "serve") spark.stop()
     }
+  }
+
+  private def orDefault(arg: String, default: => String) =
+    if (arg == "-") default else arg
+
+  private def run(spark: SparkSession, root: String, collection: String,
+                  verb: String, rest: Array[String]): Unit = {
     import spark.implicits._
     lazy val facade = new Facade(spark, root, collection)
 
@@ -451,6 +454,5 @@ object Cli {
       case other =>
         throw new IllegalArgumentException(s"unknown verb '$other'")
     }
-    if (verb != "serve" && host.isEmpty) spark.stop()
   }
 }

@@ -21,13 +21,28 @@ import org.apache.spark.sql.SparkSession
   * (an app name, a warehouse dir) before `getOrCreate()`. */
 object GraftSession {
 
-  /** The runtime SQL confs: [[builder]] sets them on a new session, and a
-    * CLI embedded in a host's session sets them on `host.newSession()`. */
+  /** The runtime SQL confs: [[builder]] sets them on a new session, and
+    * [[withSqlConfs]] on a host's session for the length of one call. */
   def sqlConfs(shufflePartitions: Int): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.ansi.enabled" -> "false",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** Runs `body` on a host's `spark` under [[sqlConfs]], then puts back
+    * what the host had set. A CLI embedded in a host (tests, notebooks)
+    * runs this way: on the host's own session, whose streaming queries
+    * the maintenance verbs' quiesce checks must see, with the host's confs
+    * as they were once the verb returns. */
+  def withSqlConfs[A](spark: SparkSession, shufflePartitions: Int)(body: => A): A = {
+    val confs = sqlConfs(shufflePartitions)
+    val before = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally confs.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator wiring, parquet output. A corpus verb calls its operator
   * directly and touches no collection, so `<root>` stays empty. Runs
   * `Cli.main` embedded — the CLI detects the pre-existing test session,
-  * runs on a child of it and must leave it running with its confs. */
+  * runs on it and must leave it running with its confs as they were. */
 class CliCorpusSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -113,12 +113,15 @@ class CliCorpusSpec extends AnyFunSuite {
     vecs.toDF("vec_id", "embedding").write.parquet(s"$dir/emb")
     Cli.main(Array(root, "c1", "sq8-audit", s"$dir/emb",
       "vec_id", "embedding", "4", "--out", s"$dir/sq8_out"))
-    assert(spark.read.parquet(s"$dir/sq8_out").count() == 12)
+    val sq8 = spark.read.parquet(s"$dir/sq8_out")
+    assert(sq8.columns.toSeq == Seq("vec_id", "l2_err"))
+    assert(sq8.count() == 12)
 
     vecs.take(2).toDF("vec_id", "embedding").write.parquet(s"$dir/q")
     Cli.main(Array(root, "c1", "mmr", s"$dir/emb", s"$dir/q",
       "2", "0.5", "6", "--out", s"$dir/mmr_out"))
     val mm = spark.read.parquet(s"$dir/mmr_out")
+    assert(mm.columns.toSeq == Seq("query_id", "rank", "neighbor_id", "mmr"))
     assert(mm.count() == 4) // 2 queries x k=2
   }
 
@@ -499,6 +502,15 @@ class CliCorpusSpec extends AnyFunSuite {
     assert(ifdue.getLong(0) == 0L && ifdue.getLong(1) == 0L,
       "compact-if-due must be a no-op when the policy is satisfied")
     assert(!spark.sparkContext.isStopped)
+    // a stream carrying the pipeline's name on the host session refuses
+    // the embedded CLI's maintenance modes
+    val live = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+      .writeStream.format("noop").queryName(StreamOps.curationQueryName(pipe)).start()
+    try Seq("compact", "compact-if-due").foreach { mode =>
+      intercept[IllegalStateException] {
+        Cli.main(Array(root, "c1", "curation", pipe, mode, "3", "--out", s"$dir/live"))
+      }
+    } finally live.stop()
   }
 
   test("dedup-index and vec-index maintenance verbs: status reports the policy, compact folds and probes are invariant") {

@@ -3,16 +3,12 @@ package graft.serve
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.etl.Config
 import graft.etl.Config.TableConfig
 import graft.io.WorkbookReader.Workbook
-import graft.ops.JsonProfile
-import graft.text.{Chat, Html, Preference, Wordpiece}
-import graft.vec.{Mmr, Quantize}
 
 /** Full lifecycle through the facade: workbook -> transform -> validate ->
   * ingest -> stage -> query -> export -> info (the reference's CLI verbs). */
@@ -108,72 +104,5 @@ class FacadeSpec extends AnyFunSuite {
     val cols = m.select("column_name").collect().map(_.getString(0)).toSet
     assert(cols.contains("fuel") && cols.contains("value"))
     assert(facade.metadata(None).count() >= m.count())
-  }
-
-  test("chat-stats / html-extract / pref-stats / json-profile operators") {
-    val dir = Files.createTempDirectory("graft_facade_corpus_")
-    val chat = """{"messages":[{"role":"user","content":"hi there"},
-      {"role":"assistant","content":"hello you two"}]}"""
-    Seq((1L, chat), (2L, "{bad")).toDF("doc_id", "text")
-      .write.parquet(s"$dir/chat")
-    val cs = Chat.stats(spark.read.parquet(s"$dir/chat"), "doc_id", "text")
-      .as[(Long, Long, Long, Long, Long, Boolean)].collect()
-      .map(r => r._1 -> r).toMap
-    assert(cs(1L)._6 && cs(1L)._5 == 5L && !cs(2L)._6)
-
-    Seq((1L, "<p>the cat and the dog is in the house today</p>" +
-        "<div class=\"nav\"><a href=\"/\">home</a><a href=\"/y\">login</a></div>"))
-      .toDF("doc_id", "text").write.parquet(s"$dir/html")
-    val he = spark.read.parquet(s"$dir/html").select(col("doc_id"),
-        Html.mainText(col("text"), minStopRatio = 0.1).as("txt"),
-        Html.linkCount(col("text")).as("links"))
-      .as[(Long, String, Long)].collect().head
-    assert(he._2 == "the cat and the dog is in the house today" && he._3 == 2L)
-
-    Seq((1L, "q", "a good long answer", "a good long answer"),  // identical
-      (2L, "q", "the cat sat down", "a dog stood up and barked loudly"))
-      .toDF("pair_id", "prompt", "chosen", "rejected")
-      .write.parquet(s"$dir/pref")
-    val ps = Preference.pairStats(spark.read.parquet(s"$dir/pref"), "pair_id",
-        "prompt", "chosen", "rejected").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(r.fieldIndex("keep"))).toMap
-    assert(!ps(1L) && ps(2L))
-
-    Seq((1L, """{"a":1,"b":2}"""), (2L, """{"a":3}"""))
-      .toDF("doc_id", "text").write.parquet(s"$dir/jsonl")
-    val kp = JsonProfile.keyProfile(spark.read.parquet(s"$dir/jsonl"), "text")
-      .as[(String, Long, Double)].collect().map(r => r._1 -> r._3).toMap
-    assert(kp("a") == 1.0 && kp("b") == 0.5)
-    val fs = JsonProfile.fieldStats(spark.read.parquet(s"$dir/jsonl"), "text", Seq("a", "zz"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(fs("a") == 2L && fs("zz") == 0L)
-  }
-
-  test("wordpiece / sq8-audit / mmr operators") {
-    val dir = Files.createTempDirectory("graft_facade_r10_")
-    Seq((1L, "aa ab"), (2L, "ab aa aa"))
-      .toDF("doc_id", "text").write.parquet(s"$dir/docs")
-    val docs = spark.read.parquet(s"$dir/docs")
-    val wp = Wordpiece.encode(docs, "doc_id", "text", Wordpiece.buildVocab(docs, "text", 1))
-      .as[(Long, Long, Long, String)].collect()
-    // "aa" is the most frequent word -> rides whole; "ab" splits to chars
-    assert(wp.filter(r => r._1 == 1L && r._2 == 1L).map(_._4).toSeq == Seq("aa"))
-    assert(wp.filter(r => r._1 == 1L && r._2 == 2L).map(_._4).sorted.toSeq
-      == Seq("##b", "a"))
-
-    val rng = new scala.util.Random(7)
-    val vecs = (0L until 20L).map(i => (i, Array.fill(4)(rng.nextGaussian().toFloat)))
-    vecs.toDF("vec_id", "embedding").write.parquet(s"$dir/emb")
-    val emb = spark.read.parquet(s"$dir/emb")
-    val audit = Quantize.sq8ReconError(emb, "vec_id", "embedding",
-      Quantize.sq8Train(emb, "embedding", 4))
-    assert(audit.columns.toSeq == Seq("vec_id", "l2_err"))
-    assert(audit.count() == 20)
-
-    vecs.take(2).toDF("vec_id", "embedding").write.parquet(s"$dir/q")
-    val mm = Mmr.mmrTopK(emb, spark.read.parquet(s"$dir/q"), "vec_id", "embedding",
-      3, 0.7, 5)
-    assert(mm.columns.toSeq == Seq("query_id", "rank", "neighbor_id", "mmr"))
-    assert(mm.count() == 6) // 2 queries x k=3
   }
 }
